@@ -1,12 +1,11 @@
 """Checkpoint / lineage store (FIXTURES.md F6).
 
-One JSON manifest per committed micro-batch plus an atomically-updated
-latest-pointer; resume = read the pointer, skip every batch whose
-batch_id the table has already committed. Manifests carry per-bucket
-applied counts + offsets -- the Spark analogue of Silk's
+One JSON manifest per committed micro-batch. The manifests are lineage
+only: the resume offset comes from the table's own ledger of committed
+batch ids (CdcPipeline.resume_lsn), never from this store. Manifests
+carry per-bucket applied counts + offsets -- the Spark analogue of Silk's
 ExecutionReport (/root/reference/silk-core/src/main/scala/org/
-silkframework/execution/ExecutionReport.scala) and of its
-activity-cache resume (silk-core/.../cache/FileEntityCache.scala:41-58).
+silkframework/execution/ExecutionReport.scala).
 """
 
 from __future__ import annotations
@@ -36,9 +35,6 @@ class CheckpointStore:
         self.root = root
         os.makedirs(root, exist_ok=True)
 
-    def _latest_path(self) -> str:
-        return os.path.join(self.root, "_latest.json")
-
     def write(self, manifest: BatchManifest) -> None:
         d = asdict(manifest)
         path = os.path.join(self.root, f"batch-{manifest.batch_id}.json")
@@ -46,17 +42,6 @@ class CheckpointStore:
         with open(tmp, "w") as f:
             json.dump(d, f)
         os.replace(tmp, path)
-        ltmp = self._latest_path() + f".tmp-{uuid.uuid4().hex}"
-        with open(ltmp, "w") as f:
-            json.dump({"batch_id": manifest.batch_id, "end_lsn": manifest.end_lsn}, f)
-        os.replace(ltmp, self._latest_path())
-
-    def latest(self) -> dict | None:
-        try:
-            with open(self._latest_path()) as f:
-                return json.load(f)
-        except FileNotFoundError:
-            return None
 
     def manifest(self, batch_id: str) -> dict | None:
         try:

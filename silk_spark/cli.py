@@ -8,7 +8,7 @@ North-rule surface: `spark-submit --py-files silk_spark.zip -m` or
 
 Subcommands:
   init      create the transcripts LakeTable
-  ingest    offset-driven micro-batch loop (resumes from checkpoint)
+  ingest    offset-driven micro-batch loop (resumes from the table's ledger)
   stream    Structured Streaming tail (availableNow drain)
   compact   fold MOR delta files
   show      print table state summary + lineage (--as-of time-travels)
@@ -47,7 +47,9 @@ def build_parser() -> argparse.ArgumentParser:
     ing.add_argument("--checkpoints", required=True)
     ing.add_argument("--end-lsn", type=int, required=True)
     ing.add_argument("--batch-size", type=int, required=True)
-    ing.add_argument("--start-lsn", type=int, default=None, help="default: resume from checkpoint")
+    ing.add_argument(
+        "--start-lsn", type=int, default=None, help="default: resume from the table's ledger"
+    )
     ing.add_argument("--compact-every", type=int, default=None)
     ing.add_argument(
         "--reconcile", action="store_true",
@@ -67,7 +69,6 @@ def build_parser() -> argparse.ArgumentParser:
 
     sh = sub.add_parser("show", help="table + lineage summary")
     sh.add_argument("--table", required=True)
-    sh.add_argument("--checkpoints", default=None)
     sh.add_argument("--as-of", type=int, default=None, help="time-travel snapshot id")
 
     hist = sub.add_parser("history", help="commit history (snapshot summaries)")
@@ -138,7 +139,11 @@ def main(argv: list[str] | None = None) -> int:
     from silk_spark.checkpoint import CheckpointStore
     from silk_spark.session import get_spark
     from silk_spark.sources.lake import LakeTable
-    from silk_spark.streaming.pipeline import CdcPipeline, create_transcripts_table
+    from silk_spark.streaming.pipeline import (
+        CdcPipeline,
+        create_transcripts_table,
+        ledger_resume_lsn,
+    )
 
     spark = get_spark("silk-spark-cli", cpus=args.cpus)
 
@@ -317,12 +322,8 @@ def main(argv: list[str] | None = None) -> int:
             "schema_id": table.schema.schema_id,
             "merge_mode": table.meta.get("merge_mode"),
             "committed_batches": len(table.meta["committed_batches"]),
+            "resume_lsn": ledger_resume_lsn(table),
         }
-        if args.checkpoints:
-            from silk_spark.checkpoint import CheckpointStore as CS
-
-            latest = CS(args.checkpoints).latest()
-            out["resume_lsn"] = latest["end_lsn"] if latest else 0
         print(json.dumps(out))
         return 0
     return 1

@@ -28,25 +28,11 @@ Single-pass (no transitive closure): each record maps to its
 best lower-keyed match — chains A<-B<-C resolve over successive
 batches, which is the at-least-once-friendly behavior we want.
 
-Impl choice is MEASURED, not argued (BASELINE.md round-5 A/B). Three
-candidate-join impls exist behind conf spark.silk.reconcile.impl:
-"inline" (default) carries the turn text through the (conv,
-turn-bucket) bucket exchange and scores in one pass; "bare" shuffles
-only (c, turn, lsn, length(text)) plus a lossless |length diff| ≤
-threshold band (levenshtein(a,b) ≤ k ⇒ |len a − len b| ≤ k), then
-fetches texts back for surviving pairs via two equi-joins; "bare_ckpt"
-is bare plus a lazy localCheckpoint of the batch so the fetch joins
-re-scan instead of recomputing lineage. The interleaved same-window
-A/B through the real CDC loop (2.5M timed events/run, 2 reps) showed
-**inline wins on BOTH text-size axes**: ~40-byte texts 90-96k ev/s vs
-bare 24-76k / bare_ckpt 51-60k; 2000-char transcript-padded texts
-21.5-24.6k vs bare 10.4-17.0k / bare_ckpt ~17.1k. Moving 3
-batch-volumes of text through ONE exchange is cheaper than scanning
-the batch 3× and running two extra joins — the exchange is
-bandwidth-bound and sequential, the re-scans contend for the same
-bus. The bare variants are retained for the record and for
-deployments where batch lineage is a cached table (the recompute cost
-the A/B charges them vanishes there).
+The candidate join carries the turn text through the (conv,
+turn-bucket) exchange and scores in the same pass: one
+bandwidth-bound exchange beat three batch re-scans plus two text-fetch
+joins on both short and transcript-scale texts (BASELINE.md round-5
+A/B).
 """
 
 from __future__ import annotations
@@ -92,46 +78,6 @@ def window_candidates(rec: DataFrame, turn_window: int = 1) -> DataFrame:
     )
 
 
-def window_candidate_keys(
-    rec: DataFrame, turn_window: int = 1, band: int | None = None
-) -> DataFrame:
-    """window_candidates on BARE KEYS: the same (c, turn-bucket)
-    blocking join, but the shuffled rows are (c, turn, lsn,
-    length(text)) — the text payload stays out of the exchange
-    entirely. `band` additionally rejects pairs whose text lengths
-    differ by more than the edit-distance threshold (lossless:
-    levenshtein ≤ k ⇒ |Δlen| ≤ k). Emits
-    (c, left_turn, left_lsn, right_turn, right_lsn)."""
-    w = max(int(turn_window), 1)
-    g = F.floor(F.col("turn") / w).cast("bigint")
-    ln = F.length(F.col("text"))
-    l = rec.select(
-        F.col("c"),
-        F.col("turn").alias("left_turn"),
-        F.col("lsn").alias("left_lsn"),
-        ln.alias("_llen"),
-        F.explode(F.array(g, g + 1)).alias("_tb"),
-    )
-    r = rec.select(
-        F.col("c"),
-        F.col("turn").alias("right_turn"),
-        F.col("lsn").alias("right_lsn"),
-        ln.alias("_rlen"),
-        g.alias("_tb"),
-    )
-    cond = (F.col("right_turn") > F.col("left_turn")) & (
-        F.col("right_turn") <= F.col("left_turn") + w
-    )
-    if band is not None:
-        # cheap int conjunct — fine for Catalyst to fold into the
-        # join condition alongside the range checks (no levenshtein
-        # here to be ordered behind it)
-        cond = cond & (F.abs(F.col("_llen") - F.col("_rlen")) <= int(band))
-    return (
-        l.join(r, ["c", "_tb"]).filter(cond).drop("_tb", "_llen", "_rlen")
-    )
-
-
 def near_dup_mapping(
     batch: DataFrame,
     text_threshold: float = 2.0,
@@ -150,69 +96,20 @@ def near_dup_mapping(
         F.col(lsn).alias("lsn"),
         F.col(text_col).alias("text"),
     ).filter(F.col("text").isNotNull())
-    try:
-        impl = batch.sparkSession.conf.get("spark.silk.reconcile.impl", "inline")
-    except Exception:
-        impl = "inline"
-    if str(impl).lower() == "inline":
-        # text-carrying candidate join — the measured winner on both
-        # short-text and transcript-scale batches (module docstring):
-        # the bucket exchange moves ~3 batch-volumes of text, but one
-        # exchange beats three batch re-scans plus two fetch joins.
-        # Deliberately NO explicit |length diff| pre-filter here:
-        # Catalyst folds every post-join predicate into the join
-        # condition in the order added, so an extra band conjunct
-        # lands AHEAD of the cheap turn-range checks and the generated
-        # code then runs levenshtein on every same-block pair before
-        # range-rejecting it — measured 4x slower on a 2.6M-event
-        # batch (216 s vs 51 s). The 3-arg levenshtein already
-        # length-short-circuits internally, and here it is evaluated
-        # LAST in the join condition (after the integer range
-        # conjuncts), which is exactly the ordering we want.
-        pairs = window_candidates(rec, turn_window)
-        scored = pairs.withColumn(
-            "lev",
-            F.levenshtein(
-                F.col("left_text"), F.col("right_text"), int(text_threshold)
-            ),
-        ).filter(F.col("lev") >= 0)
-    else:
-        # "bare"/"bare_ckpt": key-only candidates + length band, then
-        # fetch texts for ONLY the surviving pairs (AQE broadcasts the
-        # pair frame when it is small). A/B'd SLOWER than inline on
-        # both text-size axes (module docstring) — kept for the record
-        # and for cached-lineage deployments. "bare_ckpt" additionally
-        # materializes rec once (lazy localCheckpoint) so the two
-        # text-fetch joins re-scan a cached frame instead of
-        # recomputing the batch lineage.
-        if str(impl).lower() == "bare_ckpt":
-            rec = rec.localCheckpoint(eager=False)
-        keyed = window_candidate_keys(rec, turn_window, band=int(text_threshold))
-        lt = rec.select(
-            F.col("c"),
-            F.col("turn").alias("left_turn"),
-            F.col("lsn").alias("left_lsn"),
-            F.col("text").alias("left_text"),
-        )
-        rt = rec.select(
-            F.col("c"),
-            F.col("turn").alias("right_turn"),
-            F.col("lsn").alias("right_lsn"),
-            F.col("text").alias("right_text"),
-        )
-        fetched = keyed.join(lt, ["c", "left_turn", "left_lsn"]).join(
-            rt, ["c", "right_turn", "right_lsn"]
-        )
-        # 3-arg levenshtein (banded DP, early exit) evaluated only on
-        # band-surviving pairs; Catalyst may fold it into the second
-        # text-fetch equi-join's condition — harmless, that join
-        # already matched on exact keys before the extra conjunct runs
-        scored = fetched.withColumn(
-            "lev",
-            F.levenshtein(
-                F.col("left_text"), F.col("right_text"), int(text_threshold)
-            ),
-        ).filter(F.col("lev") >= 0)
+    # Deliberately NO explicit |length diff| pre-filter here: Catalyst
+    # folds every post-join predicate into the join condition in the
+    # order added, so an extra band conjunct lands AHEAD of the cheap
+    # turn-range checks and the generated code then runs levenshtein on
+    # every same-block pair before range-rejecting it — measured 4x
+    # slower on a 2.6M-event batch (216 s vs 51 s). The 3-arg
+    # levenshtein already length-short-circuits internally, and here it
+    # is evaluated LAST in the join condition (after the integer range
+    # conjuncts), which is exactly the ordering we want.
+    pairs = window_candidates(rec, turn_window)
+    scored = pairs.withColumn(
+        "lev",
+        F.levenshtein(F.col("left_text"), F.col("right_text"), int(text_threshold)),
+    ).filter(F.col("lev") >= 0)
     # best canonical target per duplicate record: closest text, then
     # smallest turn (deterministic)
     w = Window.partitionBy("c", "right_turn", "right_lsn").orderBy(

@@ -15,6 +15,13 @@ from pyspark.sql import SparkSession
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
 
+def default_driver_mem() -> str:
+    """A quarter of physical memory, at least 1g: a local session's JVM
+    shares the host with its Python workers and the OS page cache."""
+    ram = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(ram // 4 >> 30, 1)}g"
+
+
 def get_spark(
     app_name: str = "silk-spark",
     cpus: int | None = None,
@@ -38,7 +45,10 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.driver.memory", os.environ.get("SILK_SPARK_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SILK_SPARK_DRIVER_MEM") or default_driver_mem(),
+        )
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.parquet.compression.codec", "snappy")

@@ -1,4 +1,4 @@
-"""Micro-batch CDC ingest loop: changelog tail -> dedup -> MERGE -> checkpoint.
+"""Micro-batch CDC ingest loop: changelog tail -> dedup -> MERGE -> lineage manifest.
 
 The offset-driven loop is the batch face of the engine; see
 `streaming/stream.py` for the Structured Streaming (`foreachBatch`)
@@ -6,11 +6,14 @@ face, which calls the exact same `apply_batch`. Reference analogue:
 GenerateLinks' load -> match -> filter -> output orchestration
 (/root/reference/silk-rules/src/main/scala/org/silkframework/rule/
 execution/GenerateLinks.scala:63-132), with activity resume replaced
-by the checkpoint store + idempotent snapshot commits.
+by idempotent snapshot commits: the resume offset is read back from
+the table's own ledger of committed batch ids, so it moves with every
+commit and every rollback.
 """
 
 from __future__ import annotations
 
+import re
 from collections.abc import Iterable
 
 from pyspark.sql import DataFrame, SparkSession
@@ -71,6 +74,35 @@ def project_changes(batch: DataFrame) -> DataFrame:
     if "tool" in batch.columns:
         cols.append("tool")
     return batch.select(*cols)
+
+
+def lsn_batch_id(lo: int, hi: int) -> str:
+    """Ledger id of the offset loop's batch over lsn range [lo, hi)."""
+    return f"lsn-{lo}-{hi}"
+
+
+def lsn_batch_range(batch_id: str) -> tuple[int, int] | None:
+    """(lo, hi) of an `lsn_batch_id`; None for any other ledger id
+    (stream batches, compactions, bootstrap overwrites)."""
+    m = re.fullmatch(r"lsn-(\d+)-(\d+)", batch_id)
+    return (int(m[1]), int(m[2])) if m else None
+
+
+def ledger_resume_lsn(table: LakeTable) -> int:
+    """First lsn the table's ledger does not cover: its committed
+    `lsn-{lo}-{hi}` ranges are walked up from the lowest, so a range
+    that rollback() reopened resumes at the gap it left."""
+    ranges = sorted(
+        r for r in map(lsn_batch_range, table.refresh().committed_batches()) if r
+    )
+    if not ranges:
+        return 0
+    end = ranges[0][0]
+    for lo, hi in ranges:
+        if lo > end:
+            break
+        end = max(end, hi)
+    return end
 
 
 def apply_batch(
@@ -191,7 +223,7 @@ class CdcPipeline:
         every run() — a pipeline instance tailing a growing log must
         see files that landed after its previous run (the cached index
         would otherwise silently return empty slices for lsn ranges
-        the checkpoint then commits: permanent data loss)."""
+        the ledger then commits: permanent data loss)."""
         if self._changelog_path is None:
             return
         known = (
@@ -231,8 +263,7 @@ class CdcPipeline:
         )
 
     def resume_lsn(self) -> int:
-        latest = self.checkpoints.latest()
-        return int(latest["end_lsn"]) if latest else 0
+        return ledger_resume_lsn(self.table)
 
     def run(
         self,
@@ -244,8 +275,8 @@ class CdcPipeline:
         compact_every: int | None = None,
     ) -> list[dict]:
         """Process [start_lsn, end_lsn) in `batch_size` slices; resume
-        from the checkpoint pointer when start_lsn is None. `stop_after`
-        simulates a crash after k batches (for resume tests).
+        from the table's ledger (resume_lsn) when start_lsn is None.
+        `stop_after` simulates a crash after k batches (for resume tests).
         `compact_every` folds MOR delta files every k applied batches —
         bounds read amplification on a long-running tail (file count
         per bucket stays <= k + 1)."""
@@ -257,7 +288,7 @@ class CdcPipeline:
         lo = start
         while lo < end_lsn:
             hi = min(lo + batch_size, end_lsn)
-            batch_id = f"lsn-{lo}-{hi}"
+            batch_id = lsn_batch_id(lo, hi)
             batch = self._batch_frame(lo, hi)
             if self.pre_merge is not None:
                 batch = self.pre_merge(batch)

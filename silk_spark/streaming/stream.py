@@ -7,7 +7,11 @@ micro-batch boundaries: the max-by-(ts,lsn) dedup + version-resolved
 MERGE make any slicing of the log converge to the same state, and the
 Structured Streaming checkpoint adds its own exactly-once batch-id
 guard on top of the table's committed-batch set (double protection —
-either alone suffices).
+either alone suffices). A batch's ledger id is the streaming query's id
+plus Spark's batch counter: the query id persists in the stream
+checkpoint, so a restart on the same checkpoint dir replays onto the
+same ids, and a fresh checkpoint dir gets new ids instead of colliding
+with (and being skipped as) the previous query's batches.
 
 Watermarks are deliberately unused (SURVEY.md §2.13): late/duplicate
 events are resolved by version comparison at merge time, not by
@@ -21,9 +25,9 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 from pyspark.sql.types import StructType
 
-from silk_spark.checkpoint import BatchManifest, CheckpointStore
+from silk_spark.checkpoint import CheckpointStore
 from silk_spark.sources.lake import LakeTable
-from silk_spark.streaming.pipeline import project_changes
+from silk_spark.streaming.pipeline import apply_batch
 
 CHANGELOG_DDL = (
     "lsn bigint, offset bigint, op string, conv_id string, turn_idx int, "
@@ -72,21 +76,20 @@ def stream_changelog(
         ).first()
         if pre_merge is not None:
             batch_df = pre_merge(batch_df)
-        summary = table.merge_batch(project_changes(batch_df), f"stream-{batch_id}")
-        if not summary.get("skipped"):
-            checkpoints.write(
-                BatchManifest(
-                    batch_id=f"stream-{batch_id}",
-                    start_lsn=int(bounds["lo"]),
-                    end_lsn=int(bounds["hi"]) + 1,
-                    rows_applied=summary["rows_in_batch"],
-                    rows_deleted=summary["rows_deleted"],
-                    partition_stats=summary["partition_stats"],
-                    snapshot_id=summary["snapshot_id"],
-                    schema_id=summary["schema_id"],
-                    committed_at_lsn=int(bounds["hi"]) + 1,
-                )
-            )
+        # set by Spark on the thread that runs this query's batches
+        query_id = batch_df.sparkSession.sparkContext.getLocalProperty(
+            "sql.streaming.queryId"
+        )
+        if not query_id:  # an unkeyed id could collide with an applied batch
+            raise RuntimeError("foreachBatch ran without a streaming query id")
+        apply_batch(
+            table,
+            batch_df,
+            f"stream-{query_id}-{batch_id}",
+            checkpoints,
+            int(bounds["lo"]),
+            int(bounds["hi"]) + 1,
+        )
 
     writer = src.writeStream.foreachBatch(handle).option(
         "checkpointLocation", stream_checkpoint_dir

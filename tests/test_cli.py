@@ -24,7 +24,7 @@ def test_cli_round_trip(spark, tmp_path_factory, capsys):
         "--cpus", "8", "ingest", "--changelog", log_dir, "--table", table,
         "--checkpoints", ckpt, "--end-lsn", "1000", "--batch-size", "300",
     ]) == 0
-    assert main(["--cpus", "8", "show", "--table", table, "--checkpoints", ckpt]) == 0
+    assert main(["--cpus", "8", "show", "--table", table]) == 0
     out = capsys.readouterr().out.strip().splitlines()
     created, first, resumed, shown = (json.loads(x) for x in out[-4:])
     assert created["merge_mode"] == "mor"

@@ -138,6 +138,29 @@ class TestRollback:
         assert skipped == [True, True, False, False]
         _assert_state_equals_oracle(table, log)
 
+    def test_resume_after_rollback_reapplies_reopened_batches(
+        self, spark, table, log, tmp_path
+    ):
+        """A plain resume (no start_lsn, the checkpoint dir the table was
+        fed with) after rollback() picks up at the first reopened batch,
+        not past it, and converges back to the full state."""
+        table.rollback(2)
+        pipe = CdcPipeline(spark, table, CheckpointStore(str(tmp_path / "cp")), changelog=log)
+        assert pipe.resume_lsn() == 1200
+        results = pipe.run(end_lsn=N_EVENTS, batch_size=600)
+        assert [r.get("skipped", False) for r in results] == [False, False]
+        _assert_state_equals_oracle(table, log)
+
+    def test_resume_stops_at_first_ledger_gap(self, spark, log, tmp_path):
+        t = create_transcripts_table(spark, str(tmp_path / "tg"), n_buckets=8)
+        pipe = CdcPipeline(spark, t, CheckpointStore(str(tmp_path / "cpg")), changelog=log)
+        pipe.run(end_lsn=600, batch_size=600)
+        pipe.run(end_lsn=1800, batch_size=600, start_lsn=1200)
+        assert pipe.resume_lsn() == 600
+        pipe.run(end_lsn=N_EVENTS, batch_size=600)
+        assert pipe.resume_lsn() == N_EVENTS
+        _assert_state_equals_oracle(t, log)
+
     def test_rollback_unknown_snapshot_raises(self, table):
         with pytest.raises(KeyError):
             table.rollback(42)

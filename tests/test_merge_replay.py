@@ -118,7 +118,7 @@ def test_crash_resume(spark, log, tmp_path):
     # crash after 3 of 8 batches
     pipe.run(end_lsn=N_EVENTS, batch_size=500, stop_after=3)
     assert pipe.resume_lsn() == 1500
-    # restart: resume from checkpoint pointer, finish the log
+    # restart: resume from the table's ledger, finish the log
     pipe2 = CdcPipeline(spark, table.refresh(), cp, changelog=log)
     results = pipe2.run(end_lsn=N_EVENTS, batch_size=500)
     assert not any(r.get("skipped") for r in results)

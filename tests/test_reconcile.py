@@ -90,71 +90,61 @@ def test_hot_conversation_candidates_bounded(spark):
     assert adjacent == (m_turns - 1) * versions * versions
 
 
-class TestBareCandidatePath:
-    """The alternative "bare"/"bare_ckpt" impls shuffle bare keys,
-    never text — retained behind spark.silk.reconcile.impl after the
-    round-5 A/B (BASELINE.md) showed the text-carrying default wins;
-    parity and plan shape stay pinned here."""
-
-    @pytest.fixture
-    def corpus(self, spark):
-        rows, lsn = [], 0
-        for c in range(20):
-            for t in range(30):
+@pytest.fixture
+def corpus(spark):
+    """Near-dup resends on the next turn index, plus several versions of
+    one (c, turn) under different lsns (row multiplicity)."""
+    rows, lsn = [], 0
+    for c in range(20):
+        for t in range(30):
+            rows.append(
+                (f"c{c}", t, f"turn {t} of conversation {c} says something", lsn)
+            )
+            lsn += 1
+            if (t + c) % 4 == 0:  # near-dup resend on the next turn idx
                 rows.append(
-                    (f"c{c}", t, f"turn {t} of conversation {c} says something", lsn)
+                    (f"c{c}", t + 1,
+                     f"turn {t} of conversation {c} says something!", lsn)
                 )
                 lsn += 1
-                if (t + c) % 4 == 0:  # near-dup resend on the next turn idx
-                    rows.append(
-                        (f"c{c}", t + 1,
-                         f"turn {t} of conversation {c} says something!", lsn)
-                    )
-                    lsn += 1
-                if t % 7 == 0:  # same (c, turn), second version, new lsn
-                    rows.append(
-                        (f"c{c}", t, f"turn {t} of conversation {c} says other", lsn)
-                    )
-                    lsn += 1
-        return spark.createDataFrame(
-            rows, "conv_id string, turn_idx int, text string, lsn bigint"
-        )
+            if t % 7 == 0:  # same (c, turn), second version, new lsn
+                rows.append(
+                    (f"c{c}", t, f"turn {t} of conversation {c} says other", lsn)
+                )
+                lsn += 1
+    return spark.createDataFrame(
+        rows, "conv_id string, turn_idx int, text string, lsn bigint"
+    )
 
-    def test_bare_mapping_matches_inline(self, spark, corpus):
-        """Bit-identical mapping between the bare-key path (length band
-        + late text fetch) and the legacy text-carrying join — the band
-        is lossless and row multiplicity (same (c, turn), many lsn) is
-        preserved by carrying left_lsn through the candidate pairs."""
-        out = {}
-        try:
-            for impl in ("bare", "bare_ckpt", "inline"):
-                spark.conf.set("spark.silk.reconcile.impl", impl)
-                out[impl] = sorted(map(tuple, near_dup_mapping(corpus).collect()))
-        finally:
-            spark.conf.unset("spark.silk.reconcile.impl")
-        assert len(out["bare"]) > 0
-        assert out["bare"] == out["inline"] == out["bare_ckpt"]
 
-    def test_candidate_shuffle_carries_no_text(self, spark, corpus):
-        """No Exchange in the bare candidate plan may carry the text
-        column — the bucket shuffle moves (c, turn, lsn, length) only."""
-        from silk_spark.operators.reconcile import window_candidate_keys
+def _levenshtein(a: str, b: str) -> int:
+    prev = list(range(len(b) + 1))
+    for i, ca in enumerate(a, 1):
+        cur = [i]
+        for j, cb in enumerate(b, 1):
+            cur.append(min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + (ca != cb)))
+        prev = cur
+    return prev[-1]
 
-        rec = corpus.select(
-            F.col("conv_id").alias("c"), F.col("turn_idx").alias("turn"),
-            "lsn", "text",
-        )
-        keyed = window_candidate_keys(rec, 1, band=2)
-        plan = keyed._sc._jvm.PythonSQLUtils.explainString(
-            keyed._jdf.queryExecution(), "formatted"
-        )
-        blocks = [
-            b for b in plan.split("\n\n")
-            if b.strip() and "Exchange" in b.strip().splitlines()[0]
-        ]
-        assert blocks, plan  # the blocking join does shuffle…
-        for b in blocks:
-            assert "text#" not in b, b  # …but never the payload
+
+def test_mapping_matches_brute_force_reference(corpus):
+    """Every in-window pair (right turn − left turn == 1, same conv)
+    within levenshtein 2, best target per (conv, turn, lsn) by
+    (lev, left_turn) — enumerated in pure Python over all pairs."""
+    recs = [tuple(r) for r in corpus.collect()]
+    best = {}
+    for lc, lt, ltext, _ in recs:
+        for rc, rt, rtext, rlsn in recs:
+            if lc != rc or not 0 < rt - lt <= 1:
+                continue
+            lev = _levenshtein(ltext, rtext)
+            key = (rc, rt, rlsn)
+            if lev <= 2 and (lev, lt) < best.get(key, (3, 0)):
+                best[key] = (lev, lt)
+    want = sorted((*k, lt) for k, (_, lt) in best.items())
+    got = sorted(map(tuple, near_dup_mapping(corpus).collect()))
+    assert len(want) > 0
+    assert got == want
 
 
 def test_crash_mid_write_leaves_table_consistent(spark, batch, tmp_path):

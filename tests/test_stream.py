@@ -10,7 +10,7 @@ import pytest
 from silk_spark.checkpoint import CheckpointStore
 from silk_spark.datagen import changelog
 from silk_spark.streaming.pipeline import CdcPipeline, create_transcripts_table
-from silk_spark.streaming.stream import run_stream_to_completion
+from silk_spark.streaming.stream import run_stream_to_completion, stream_changelog
 
 from tests.conftest import final_state_oracle, normalize
 
@@ -58,7 +58,6 @@ def test_stream_with_reconcile_pre_merge(spark, workdir):
     from pyspark.sql import functions as F
 
     from silk_spark.operators.reconcile import reconcile_near_dups
-    from silk_spark.streaming.stream import stream_changelog
 
     n = 1000
     log = changelog(spark, n, n_convs=20, turns_per_conv=8, seed=23)
@@ -106,3 +105,34 @@ def test_stream_with_reconcile_pre_merge(spark, workdir):
     }
     if not original_turn3:
         assert 3 not in rows
+
+
+def test_fresh_stream_checkpoint_on_existing_table_applies_new_data(spark, workdir):
+    """Resetting the stream checkpoint (a fresh dir on a table an earlier
+    query already fed) restarts Spark's batch counter at 0. The new
+    query's batches must not collide with the old query's ledger ids and
+    be skipped: the appended tail has to land."""
+    log = changelog(spark, 3000, n_convs=40, turns_per_conv=8, seed=31)
+    log_dir = os.path.join(workdir, "log_reset")
+    log.filter("lsn < 2000").repartitionByRange(10, "lsn").write.parquet(log_dir)
+    table = create_transcripts_table(spark, os.path.join(workdir, "t_reset"), n_buckets=8)
+    ckpt = CheckpointStore(os.path.join(workdir, "cp_reset"))
+
+    def drain(stream_dir, files_per_trigger):
+        q = stream_changelog(
+            spark, log_dir, table, ckpt, os.path.join(workdir, stream_dir),
+            max_files_per_trigger=files_per_trigger,
+        )
+        q.awaitTermination(300)
+        if q.isActive:
+            q.stop()
+
+    drain("ssc_run1", 1)  # ten one-file micro-batches
+    log.filter("lsn >= 2000").repartitionByRange(5, "lsn").write.mode(
+        "append"
+    ).parquet(log_dir)
+    drain("ssc_run2", 100)  # fresh checkpoint dir: batch counter back at 0
+
+    got = normalize(table.read().toPandas())
+    want = final_state_oracle(log.toPandas())
+    pd.testing.assert_frame_equal(got, normalize(want))
