@@ -810,17 +810,18 @@ def q_reconcile_turns(spark: SparkSession, sf_dir: str) -> DataFrame:
     a transcript-shaped batch (conv_id, turn_idx, lsn, text, ts) is
     derived deterministically from the events log, near-duplicate
     turns (turn off by one, levenshtein <= 2 — retries / editor
-    resends) are canonicalized onto the earlier turn via the blocked
-    candidate join + top-1 window of reconcile_near_dups, and the
-    max-by-(ts, lsn) dedup then resolves each reconciled key to one
-    winner — exactly what CdcPipeline runs before every MERGE.
+    resends) are canonicalized onto the earlier turn by the one-pass
+    blocked scoring of reconcile_near_dups, and the max-by-(ts, lsn)
+    dedup then resolves each reconciled key to one winner — exactly
+    what CdcPipeline runs before every MERGE.
 
     Reference: GenerateLinks.scala:63-132 (candidate generation),
     Matcher.scala:254-291 (pair scoring), Filter.scala:33-50 (best
-    link per record). Scale: candidates are blocked on
-    (conv_id, turn-bucket) with a one-bucket probe — a hot
-    conversation costs O(records-per-bucket), never O(m^2) — and the
-    remap join is AQE-sized (broadcast iff the mapping is small)."""
+    link per record). Scale: the batch is shuffled once, on
+    (conv_id, turn-block); each record probes the candidates of its
+    own block, so a hot conversation costs O(records-per-block), never
+    O(m^2), and the canonical turn comes out on the record itself (no
+    remap join)."""
     from silk_spark.operators.dedup import latest_by_key
     from silk_spark.operators.reconcile import reconcile_near_dups
 

@@ -37,6 +37,11 @@ Verification never rescans old text wholesale: candidate old ids are
 LEFT-SEMI joined into the corpus state first (bucket/row-group
 pruning applies), and only that slice is re-shingled.
 
+Parquet state records the parameters its band ids depend on (num_perm,
+bands, seed, shingle_n, signature impl) in `params.json` on the first
+batch; reopening it under any other values raises, because probing
+with incompatible band ids would silently miss every cross-batch pair.
+
 In-memory state (state_dir=None) keeps the same plan shapes with
 lazily-unioned frames — the test/driver-query mode; at 10^10 docs use
 state_dir (or swap MetadataIO-style storage in at the two _read/_append
@@ -45,6 +50,7 @@ seams).
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -52,6 +58,7 @@ from pyspark.sql import functions as F
 
 from silk_spark.operators.dedup_suite import (
     _parallel,
+    _signature_impl,
     minhash_banded,
     shingle_frame,
     verify_pairs_exact,
@@ -94,6 +101,33 @@ class IncrementalDeduper:
 
     def _corpus_path(self) -> str:
         return os.path.join(self.state_dir, "corpus")
+
+    def _check_params(self, batch: DataFrame) -> None:
+        """Record the band-id parameters with new parquet state, or
+        raise if existing state was built under other ones."""
+        if self.state_dir is None:
+            return
+        want = {
+            "num_perm": self.num_perm,
+            "bands": self.bands,
+            "seed": self.seed,
+            "shingle_n": self.shingle_n,
+            "signature_impl": _signature_impl(batch),
+        }
+        path = os.path.join(self.state_dir, "params.json")
+        if os.path.exists(path):
+            with open(path) as f:
+                have = json.load(f)
+            if have != want:
+                raise ValueError(
+                    f"dedup state {self.state_dir} was built with {have}; "
+                    f"probing it with {want} would miss every cross-batch pair"
+                )
+            return
+        os.makedirs(self.state_dir, exist_ok=True)
+        with open(path + ".tmp", "w") as f:
+            json.dump(want, f)
+        os.replace(path + ".tmp", path)
 
     def _read_bands(self) -> "DataFrame | None":
         if self.state_dir is None:
@@ -155,6 +189,7 @@ class IncrementalDeduper:
         returned frame is computed EAGERLY (the state must not mutate
         under a lazy plan), small by construction (verified dups
         only), and cached."""
+        self._check_params(batch)
         batch = batch.select(
             F.col(self.id_col).alias("doc_id"), F.col(self.text_col).alias("text")
         )

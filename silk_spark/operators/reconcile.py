@@ -7,74 +7,117 @@ editor resends, at-least-once upstreams) — are canonicalized onto one
 key so the max-by-(ts, lsn) dedup resolves them like any other
 duplicate. This is Silk's matcher applied inside the CDC stream:
 
-    block on conv_id (salted)  →  GenerateLinks' CacheLoader/Index
-    candidate equi-join        →  Matcher partition scoring
-    levenshtein + confidence   →  Comparison (names-benchmark rule:
-                                  threshold 2, config.xml)
-    best-link-per-record       →  Filter.scala:33-50 top-1
-    remap to canonical key     →  the link's "owl:sameAs" applied
+    block on (conv, turn-block)  →  GenerateLinks' CacheLoader/Index
+    candidate list per block     →  Matcher partition scoring
+    levenshtein + confidence     →  Comparison (names-benchmark rule:
+                                    threshold 2, config.xml)
+    best-link-per-record         →  Filter.scala:33-50 top-1
+    canonical turn on the record →  the link's "owl:sameAs" applied
 
 Reference: rule/execution/GenerateLinks.scala:63-132, Matcher.scala:
 254-291, Filter.scala:33-50; distance semantics Comparison.scala:71-78.
 
-Scale: candidates are blocked on (conv_id, turn-bucket), never bare
-conv_id — a hot conversation with m records in a batch costs
-O(m · records-per-bucket), not O(m²): the left side emits its bucket
-and the next one (bucket width = turn_window), the right side its own
-bucket, so every in-window pair shares a block by construction.
-Scoring is built-in levenshtein (codegen). The remap join is left to
-AQE, which broadcasts the mapping iff its runtime size is small.
-Single-pass (no transitive closure): each record maps to its
-best lower-keyed match — chains A<-B<-C resolve over successive
-batches, which is the at-least-once-friendly behavior we want.
+One pass: the batch is read once and shuffled once, on (conv_id,
+turn-block) with block width W = turn_window. Each record goes into
+the exchange as a probe of its own block and as a candidate offered to
+the next block (and to its own block when W > 1), so every record with
+a turn in [turn − W, turn − 1] sits in the probe's partition. A window
+over the partition collects the candidates' (turn, text); each probe
+keeps the best in-window candidate by (levenshtein, turn) and carries
+its canonical turn straight out: no candidate join, no remap join.
+Blocking on (conv, turn-block), never bare conv_id, keeps a hot
+conversation with m records in a batch at O(m · records-per-block)
+work spread over its blocks, not O(m²) in one task.
 
-The candidate join carries the turn text through the (conv,
-turn-bucket) exchange and scores in the same pass: one
-bandwidth-bound exchange beat three batch re-scans plus two text-fetch
-joins on both short and transcript-scale texts (BASELINE.md round-5
-A/B).
+`window_candidates` and `near_dup_mapping` are the pairs view and the
+mapping view of that blocked frame: what the stage scores and what it
+remaps. Rows with a null conv_id, turn or text never match, and a
+record with a null lsn is never remapped. Single-pass (no transitive
+closure): each record maps to its best lower-keyed match — chains
+A<-B<-C resolve over successive batches, which is the
+at-least-once-friendly behavior we want.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
+
+# Written as SQL expression strings, not Column functions: built from
+# Column calls, one blocked frame took ~0.25 s of driver time (about
+# 1000 Py4J round trips) on a 4-core host, against ~0.07 s from
+# strings, and every micro-batch pays it.
+
+
+def _q(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _blocked(df: DataFrame, turn_window: int, conv: str, turn: str, text: str) -> DataFrame:
+    """Every row of `df` once, as a probe in its (conv, turn-block)
+    partition, plus `_cands`: the (t, x) turn and text of every record
+    of the same conversation with t in [turn − W, turn − 1] (null for a
+    probe with a null conv, turn or text). One exchange, one sort: a
+    candidate copy carries only conv and its (t, x), the row itself
+    crosses once."""
+    w = max(int(turn_window), 1)
+    c, t, x = _q(conv), _q(turn), _q(text)
+    blk = f"CAST(FLOOR({t} / {w}) AS BIGINT)"
+    ok = f"({c} IS NOT NULL AND {t} IS NOT NULL AND {x} IS NOT NULL)"
+    offered = [f"{blk} + 1"] + ([blk] if w > 1 else [])
+    copies = ", ".join(
+        [f"named_struct('probe', true, 'blk', {blk})"]
+        + [f"IF({ok}, named_struct('probe', false, 'blk', {b}), NULL)" for b in offered]
+    )
+    return (
+        df.selectExpr("*", f"explode(filter(array({copies}), y -> y IS NOT NULL)) AS _cp")
+        .selectExpr(
+            c,
+            *(f"IF(_cp.probe, {_q(n)}, NULL) AS {_q(n)}" for n in df.columns if n != conv),
+            "_cp.probe AS _probe",
+            f"collect_list(IF(_cp.probe, NULL, named_struct('t', {t}, 'x', {x})))"
+            f" OVER (PARTITION BY {c}, _cp.blk) AS _cands",
+        )
+        .where("_probe")
+        .selectExpr(
+            *map(_q, df.columns),
+            f"IF({ok}, filter(_cands, e -> e.t BETWEEN {t} - {w} AND {t} - 1), NULL) AS _cands",
+        )
+    )
+
+
+def _linked(
+    df: DataFrame, text_threshold: float, turn_window: int, conv: str, turn: str, lsn: str, text: str
+) -> DataFrame:
+    """`_blocked` probes with `canonical_turn`: the turn of the best
+    candidate within levenshtein `text_threshold` — closest text, then
+    smallest turn — or null. Each row is scored on its own: within a
+    batch an lsn names one log event."""
+    k = int(text_threshold)
+    scored = (
+        f"filter(transform(_cands, e -> named_struct('lev', levenshtein(e.x, {_q(text)}, {k}), "
+        "'t', e.t)), s -> s.lev >= 0)"
+    )
+    return _blocked(df, turn_window, conv, turn, text).selectExpr(
+        "*", f"IF({_q(lsn)} IS NULL, NULL, array_min({scored}).t) AS canonical_turn"
+    )
 
 
 def window_candidates(rec: DataFrame, turn_window: int = 1) -> DataFrame:
-    """Candidate pairs (right_turn − left_turn ∈ (0, turn_window]) via
-    composite (conv, turn-bucket) blocking. With bucket width W =
-    turn_window, a qualifying right row's bucket is the left row's
-    bucket g or g+1, so the left side explodes to {g, g+1} and the
-    equi-join on (c, _tb) has provable recall 1.0 while keeping each
-    task's pair count bounded by the per-bucket row count — the skew
-    fix for conversations that dominate a batch (Silk MultiPassBlocking
-    /root/reference/silk-rules/.../methods/MultiPassBlocking.scala:13-21
-    applied to a numeric range).
+    """The pairs view: one row per candidate pair (right_turn −
+    left_turn ∈ (0, turn_window], same conversation) that the blocked
+    frame scores. A task's pair count is bounded by its block's row
+    count — the skew fix for conversations that dominate a batch (Silk
+    MultiPassBlocking, silk-rules/.../methods/MultiPassBlocking.scala:
+    13-21, applied to a numeric range).
 
-    `rec` needs columns (c, turn, plus payload); emits left_*/right_*."""
-    w = max(int(turn_window), 1)
-    g = F.floor(F.col("turn") / w).cast("bigint")
-    l = rec.select(
-        F.col("c"),
-        F.col("turn").alias("left_turn"),
-        F.col("text").alias("left_text"),
-        F.explode(F.array(g, g + 1)).alias("_tb"),
-    )
-    r = rec.select(
-        F.col("c"),
-        F.col("turn").alias("right_turn"),
-        F.col("lsn").alias("right_lsn"),
-        F.col("text").alias("right_text"),
-        g.alias("_tb"),
-    )
-    return (
-        l.join(r, ["c", "_tb"])
-        .filter(
-            (F.col("right_turn") > F.col("left_turn"))
-            & (F.col("right_turn") <= F.col("left_turn") + w)
-        )
-        .drop("_tb")
+    `rec` needs columns (c, turn, lsn, text); emits c, left_turn,
+    left_text, right_turn, right_lsn, right_text."""
+    return _blocked(rec, turn_window, "c", "turn", "text").selectExpr(
+        "c",
+        "inline(transform(_cands, e -> named_struct('left_turn', e.t, 'left_text', e.x)))",
+        "turn AS right_turn",
+        "lsn AS right_lsn",
+        "text AS right_text",
     )
 
 
@@ -86,44 +129,17 @@ def near_dup_mapping(
     text_col: str = "text",
     version_cols=("ts", "lsn"),
 ) -> DataFrame:
-    """Mapping (conv_id, turn_idx, lsn) -> canonical_turn_idx for
-    records that near-duplicate an earlier turn in the same batch."""
+    """The mapping view: (conv_id, turn_idx, lsn) -> canonical_turn,
+    one row per record that near-duplicates an earlier turn in the same
+    batch."""
     conv, turn = keys
     lsn = version_cols[-1]
-    rec = batch.select(
-        F.col(conv).alias("c"),
-        F.col(turn).alias("turn"),
-        F.col(lsn).alias("lsn"),
-        F.col(text_col).alias("text"),
-    ).filter(F.col("text").isNotNull())
-    # Deliberately NO explicit |length diff| pre-filter here: Catalyst
-    # folds every post-join predicate into the join condition in the
-    # order added, so an extra band conjunct lands AHEAD of the cheap
-    # turn-range checks and the generated code then runs levenshtein on
-    # every same-block pair before range-rejecting it — measured 4x
-    # slower on a 2.6M-event batch (216 s vs 51 s). The 3-arg
-    # levenshtein already length-short-circuits internally, and here it
-    # is evaluated LAST in the join condition (after the integer range
-    # conjuncts), which is exactly the ordering we want.
-    pairs = window_candidates(rec, turn_window)
-    scored = pairs.withColumn(
-        "lev",
-        F.levenshtein(F.col("left_text"), F.col("right_text"), int(text_threshold)),
-    ).filter(F.col("lev") >= 0)
-    # best canonical target per duplicate record: closest text, then
-    # smallest turn (deterministic)
-    w = Window.partitionBy("c", "right_turn", "right_lsn").orderBy(
-        F.col("lev").asc(), F.col("left_turn").asc()
-    )
+    cols = [_q(conv), _q(turn), _q(lsn)]
     return (
-        scored.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select(
-            F.col("c").alias(conv),
-            F.col("right_turn").alias(turn),
-            F.col("right_lsn").alias(lsn),
-            F.col("left_turn").alias("canonical_turn"),
-        )
+        _linked(batch.selectExpr(*cols, _q(text_col)), text_threshold, turn_window, conv, turn, lsn, text_col)
+        .where("canonical_turn IS NOT NULL")
+        .selectExpr(*cols, "canonical_turn")
+        .distinct()
     )
 
 
@@ -140,13 +156,19 @@ def reconcile_near_dups(
     reconciled turn. Schema is unchanged."""
     conv, turn = keys
     lsn = version_cols[-1]
-    mapping = near_dup_mapping(
-        batch, text_threshold, turn_window, keys, text_col, version_cols
+    linked = _linked(batch, text_threshold, turn_window, conv, turn, lsn, text_col)
+    # the pairs and mapping views of this plan, left lazy: this path
+    # never runs them, a traced run (perfbench --trace) counts them
+    window_candidates(
+        batch.selectExpr(
+            f"{_q(conv)} AS c", f"{_q(turn)} AS turn", f"{_q(lsn)} AS lsn", f"{_q(text_col)} AS text"
+        ),
+        turn_window,
     )
-    # no forced broadcast: the mapping is usually tiny, but a
-    # pathological batch could overflow the driver — AQE picks
-    # broadcast-hash at runtime from the mapping's actual size
-    out = batch.join(mapping, on=[conv, turn, lsn], how="left")
-    return out.withColumn(
-        turn, F.coalesce(F.col("canonical_turn"), F.col(turn))
-    ).drop("canonical_turn").select(*batch.columns)
+    near_dup_mapping(batch, text_threshold, turn_window, keys, text_col, version_cols)
+    return linked.selectExpr(
+        *(
+            f"coalesce(canonical_turn, {_q(n)}) AS {_q(n)}" if n == turn else _q(n)
+            for n in batch.columns
+        )
+    )

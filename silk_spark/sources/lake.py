@@ -43,6 +43,7 @@ import uuid
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
+from silk_spark.functions.xxh64 import xxh64
 from silk_spark.operators.dedup import latest_by_key
 from silk_spark.schema import SchemaRegistry, TableSchema, align_to_schema
 
@@ -83,6 +84,32 @@ VERSION_ORDER = ["ts", "lsn"]
 def bucket_expr(col: str, n_buckets: int) -> F.Column:
     """Stable hash bucket for a key column (Iceberg bucket-transform analogue)."""
     return F.pmod(F.xxhash64(F.col(col)), F.lit(n_buckets)).cast("int")
+
+
+def bucket_of(key_value, dtype: str, n_buckets: int) -> int:
+    """`bucket_expr` of one key value, computed on the driver: Spark's
+    xxhash64 (seed 42) of a string's UTF-8 bytes, or of an int's 4 /
+    a bigint's 8 little-endian bytes, then pmod."""
+    if dtype == "string":
+        data = key_value.encode("utf-8")
+    elif dtype in ("int", "bigint"):
+        data = int(key_value).to_bytes(4 if dtype == "int" else 8, "little", signed=True)
+    else:
+        raise TypeError(f"no driver-side bucket hash for key type {dtype!r}")
+    h = xxh64(data)
+    return (h - (1 << 64) if h >> 63 else h) % n_buckets
+
+
+def write_buckets(df: DataFrame, path: str, sort_cols: tuple[str, ...] = ()) -> None:
+    """Write `df` under `path`/_bucket=<b>/, one file per bucket. The
+    exchange hashes on `_bucket` alone, so each bucket lands in exactly
+    one task; with no partition count given, AQE sizes the stage from
+    the data and the session's parallelism (about one writer task per
+    core) instead of one task per bucket."""
+    out = df.repartition("_bucket")
+    if sort_cols:
+        out = out.sortWithinPartitions(*sort_cols)
+    out.write.mode("overwrite").partitionBy("_bucket").parquet(path)
 
 
 class LakeTable:
@@ -391,8 +418,9 @@ class LakeTable:
         equality into the parquet scan. On a 4096-bucket 100 TB table
         this touches 1/4096 of the files (plus any not-yet-compacted
         unpartitioned deltas) instead of all of them — the serving-path
-        read. The bucket id comes from a one-row local expression eval
-        (same xxhash64 the writer used), not a cluster job.
+        read. The bucket id is hashed on the driver (`bucket_of`: the
+        writer's xxhash64 over the key column's declared type), not by a
+        Spark job.
 
         `as_of_snapshot` (id or tag) time-travels the lookup; the key
         hashes with THAT snapshot's recorded bucket layout, so lookups
@@ -402,18 +430,12 @@ class LakeTable:
         sid = self.resolve_ref(as_of_snapshot)
         snap_rec = (self._snapshot(sid) if sid is not None else self.current_snapshot()) or {}
         eff_n_buckets = snap_rec.get("n_buckets", meta["n_buckets"])
-        row = (
-            self.spark.range(1)
-            .select(
-                F.pmod(F.xxhash64(F.lit(key_value)), F.lit(eff_n_buckets))
-                .cast("int")
-                .alias("b")
-            )
-            .first()
-        )
+        # the key's type in the schema scan() reads that snapshot with
+        versions = {v.schema_id: v for v in self.registry.versions}
+        dtype = versions.get(snap_rec.get("schema_id"), self.schema).by_name(key_col).dtype
         return (
             self.scan(
-                buckets=[int(row["b"])],
+                buckets=[bucket_of(key_value, dtype, eff_n_buckets)],
                 with_tombstones=False,
                 as_of_snapshot=sid,
             )
@@ -632,12 +654,7 @@ class LakeTable:
                 rows_deleted = int(obs.get["deletes"] or 0)
                 partition_stats = {"*": rows_in_batch}
             else:
-                (
-                    out.repartition(n_buckets, "_bucket")
-                    .write.mode("overwrite")
-                    .partitionBy("_bucket")
-                    .parquet(snap_dir)
-                )
+                write_buckets(out, snap_dir)
                 rows_in_batch = int(obs.get["rows"] or 0)
                 rows_deleted = int(obs.get["deletes"] or 0)
                 changed_buckets, partition_stats = _bucket_stats_from_footers(snap_dir)
@@ -663,14 +680,7 @@ class LakeTable:
                 out = latest_by_key(
                     base.unionByName(changes, allowMissingColumns=True), keys, order
                 )
-                # one output file set per bucket; repartition by bucket keeps
-                # each parquet dir written by the executors owning that hash range
-                (
-                    out.repartition(max(len(changed_buckets), 1), "_bucket")
-                    .write.mode("overwrite")
-                    .partitionBy("_bucket")
-                    .parquet(snap_dir)
-                )
+                write_buckets(out, snap_dir)
             changes.unpersist()
 
         # build new file manifest: COW replaces touched buckets' files,
@@ -796,13 +806,8 @@ class LakeTable:
         # groups inside a bucket (Iceberg sort-order analogue). Only
         # maintenance rewrites pay the sort — the hot MOR append path
         # stays exchange-free.
-        sort_cols = ["_bucket"] + [c for c in meta["key_cols"] if c in out.columns]
-        (
-            out.repartition(n_buckets, "_bucket")
-            .sortWithinPartitions(*sort_cols)
-            .write.mode("overwrite")
-            .partitionBy("_bucket")
-            .parquet(snap_dir)
+        write_buckets(
+            out, snap_dir, ("_bucket", *(c for c in meta["key_cols"] if c in out.columns))
         )
         files = {}
         for entry in sorted(os.listdir(snap_dir)):

@@ -52,3 +52,26 @@ class TestIncrementalEqualsGlobal:
         second = d.process_batch(b).collect()
         assert first == []
         assert [(r["left_id"], r["right_id"]) for r in second] == [(1, 2)]
+
+
+class TestStateParams:
+    def test_reopen_with_other_band_params_raises(self, spark, tmp_path):
+        """Parquet state built under one (num_perm, bands, seed,
+        shingle_n) must refuse a probe under another — the band ids
+        would not match and every cross-batch pair would be missed —
+        while a reopen under the same parameters still finds them."""
+        a = spark.createDataFrame(
+            [(1, "alpha beta gamma delta epsilon zeta eta theta iota kappa")],
+            "doc_id bigint, text string",
+        )
+        b = spark.createDataFrame(
+            [(2, "alpha beta gamma delta epsilon zeta eta theta iota lambda")],
+            "doc_id bigint, text string",
+        )
+        state = str(tmp_path / "s")
+        IncrementalDeduper(spark, threshold=0.5, state_dir=state).process_batch(a)
+        for other in ({"bands": 16}, {"num_perm": 64}, {"seed": 7}, {"shingle_n": 4}):
+            with pytest.raises(ValueError, match="cross-batch"):
+                IncrementalDeduper(spark, threshold=0.5, state_dir=state, **other).process_batch(b)
+        again = IncrementalDeduper(spark, threshold=0.5, state_dir=state).process_batch(b)
+        assert [(r["left_id"], r["right_id"]) for r in again.collect()] == [(1, 2)]

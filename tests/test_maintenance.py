@@ -183,12 +183,44 @@ class TestLookup:
         fewer than the full table's."""
         table.compact()
         conv = table.read().toPandas()["conv_id"].iloc[0]
-        lookup_files = {os.path.basename(p) for p in table.lookup(conv).inputFiles()}
-        full_files = {os.path.basename(p) for p in table.read().inputFiles()}
+
+        def path(p):
+            return os.path.normpath(p.removeprefix("file:"))
+
+        lookup_files = {path(p) for p in table.lookup(conv).inputFiles()}
+        full_files = {path(p) for p in table.read().inputFiles()}
         files_by_bucket = {
-            b: {os.path.basename(self_p) for self_p, _ in map(table._file_entry, fs)}
+            b: {path(self_p) for self_p, _ in map(table._file_entry, fs)}
             for b, fs in table._bucket_files().items()
         }
         assert lookup_files < full_files
         assert any(lookup_files == fs for fs in files_by_bucket.values())
         assert table.lookup(conv).count() > 0
+
+    def test_driver_bucket_matches_bucket_expr(self, spark):
+        """`bucket_of` (the lookup's driver-side hash) equals the
+        writer's `bucket_expr` for random keys of every supported key
+        type and several layouts; other key types raise."""
+        import random
+
+        from pyspark.sql import functions as F
+
+        from silk_spark.sources.lake import bucket_expr, bucket_of
+
+        rng = random.Random(4242)
+        alphabet = "abcxyz-_ 0189κόσμεß"
+        keys = {
+            "string": ["", "conv-00000001"]
+            + ["".join(rng.choice(alphabet) for _ in range(rng.randint(0, 40))) for _ in range(150)],
+            "int": [0, -1, 2**31 - 1, -(2**31)] + [rng.randint(-(2**31), 2**31 - 1) for _ in range(150)],
+            "bigint": [0, -1, 2**63 - 1, -(2**63)] + [rng.randint(-(2**63), 2**63 - 1) for _ in range(150)],
+        }
+        for dtype, values in keys.items():
+            df = spark.createDataFrame([(i, v) for i, v in enumerate(values)], f"i int, k {dtype}")
+            for n in (1, 7, 64, 4096):
+                got = [bucket_of(v, dtype, n) for v in values]
+                want = [r.b for r in df.orderBy("i").select(bucket_expr("k", n).alias("b")).collect()]
+                assert got == want, (dtype, n)
+        for dtype in ("double", "date", "timestamp", "binary"):
+            with pytest.raises(TypeError):
+                bucket_of(1, dtype, 8)

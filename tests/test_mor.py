@@ -156,3 +156,32 @@ def test_mor_compaction_keeps_tombstones_by_default(spark, log, tmp_path_factory
     with_t = t.scan(with_tombstones=True).count()
     without_t = t.scan(with_tombstones=False).count()
     assert with_t > without_t  # deletes retained as tombstones
+
+
+def test_mor_commit_one_file_per_bucket_from_per_core_write_tasks(spark, log, tmp_path_factory):
+    """A bucketed MOR commit writes exactly one file per touched bucket,
+    and its write stage runs at most spark.sql.shuffle.partitions
+    tasks — sized by AQE from the data, not one task per bucket."""
+    from silk_spark.streaming.pipeline import project_changes
+
+    n_buckets = 64
+    parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert parts < n_buckets
+    t = create_transcripts_table(
+        spark, str(tmp_path_factory.mktemp("mor_tasks")), n_buckets=n_buckets, merge_mode="mor"
+    )
+    sc = spark.sparkContext
+    group = "mor-write-tasks"
+    sc.setJobGroup(group, "bucketed MOR commit")
+    try:
+        summary = t.merge_batch(project_changes(log), "b-0")
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    tracker = sc.statusTracker()
+    jobs = sorted(tracker.getJobIdsForGroup(group))
+    write_stage = max(tracker.getJobInfo(jobs[-1]).stageIds)
+    assert tracker.getStageInfo(write_stage).numTasks <= parts
+    files = t.current_snapshot()["files"]
+    assert sorted(files) == sorted(summary["partition_stats"])
+    assert len(files) > parts
+    assert all(len(fs) == 1 for fs in files.values())

@@ -259,3 +259,26 @@ def test_new_curation_queries_have_no_nested_loop_joins(spark, sf):
         plan = plan_of(e.queries()[name](spark, sf))
         assert "CartesianProduct" not in plan
         assert "BroadcastNestedLoopJoin" not in plan
+
+
+def test_reconcile_is_one_slice_scan_and_one_shuffle(spark, tmp_path_factory):
+    """A reconcile batch reads its log slice once and shuffles once, on
+    (conv_id, turn-block): the candidate lists and the canonical turn
+    come out of one blocked exchange, with no candidate self-join and
+    no remap join back onto the batch."""
+    from silk_spark.datagen import changelog
+    from silk_spark.operators.reconcile import reconcile_near_dups
+    from silk_spark.streaming.pipeline import CdcPipeline
+
+    d = str(tmp_path_factory.mktemp("rlog"))
+    changelog(spark, 2000, seed=5).write.mode("overwrite").parquet(d)
+    pipe = CdcPipeline(spark, None, None, changelog_path=d)
+    df = reconcile_near_dups(pipe._batch_frame(500, 1500))
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FileScan parquet") == 1, plan
+    shuffles = [
+        ln for ln in plan.splitlines() if "Exchange " in ln and "BroadcastExchange" not in ln
+    ]
+    assert len(shuffles) == 1, plan
+    assert "hashpartitioning(conv_id" in shuffles[0]
+    assert "Join" not in plan.replace("BroadcastNestedLoopJoin", ""), plan

@@ -147,6 +147,60 @@ def test_mapping_matches_brute_force_reference(corpus):
     assert got == want
 
 
+def _reconcile_reference(rows, window, threshold=2):
+    """reconcile_near_dups by enumeration: a row with conv, turn, lsn
+    and text set moves to the turn of its best candidate — a row of the
+    same conv with text set and a turn in [turn − window, turn − 1],
+    within levenshtein `threshold` — by (lev, turn); nulls never match
+    (as in an equi-join on conv and a candidate filter on text)."""
+    out = []
+    for c, t, x, lsn in rows:
+        best = None
+        if None not in (c, t, x, lsn):
+            for lc, lt, lx, _ in rows:
+                if lc == c and lt is not None and lx is not None and t - window <= lt < t:
+                    lev = _levenshtein(lx, x)
+                    if lev <= threshold and (best is None or (lev, lt) < best):
+                        best = (lev, lt)
+        out.append((c, t if best is None else best[1], x, lsn))
+    return out
+
+
+def test_reconcile_matches_brute_force_with_nulls_and_hot_block(spark):
+    """turn_window=2 over short random texts (many near pairs), rows
+    with a null conv_id, turn, text or lsn, and one hot block holding
+    many lsn versions of each of a few turns."""
+    import random
+
+    rng = random.Random(2024)
+    rows, lsn = [], 0
+
+    def text():
+        return "".join(rng.choice("ab") for _ in range(rng.randint(1, 4)))
+
+    for _ in range(400):
+        rows.append((
+            rng.choice(["c0", "c1", "c2", "c3", None]),
+            rng.choice([*range(10), None]),
+            rng.choice([text(), text(), text(), None]),
+            rng.choice([lsn, lsn, lsn, None]),
+        ))
+        lsn += 1
+    for t in (4, 5, 6):
+        for _ in range(40):
+            rows.append(("hot", t, text(), lsn))
+            lsn += 1
+    df = spark.createDataFrame(rows, "conv_id string, turn_idx int, text string, lsn bigint")
+    got = reconcile_near_dups(df, turn_window=2).collect()
+    want = _reconcile_reference(rows, window=2)
+
+    def order(r):
+        return tuple((v is None, v) for v in r)
+
+    assert sorted(map(tuple, got), key=order) == sorted(want, key=order)
+    assert sum(a != b for a, b in zip(rows, want)) > 50  # remaps happen
+
+
 def test_crash_mid_write_leaves_table_consistent(spark, batch, tmp_path):
     """A snap dir written without a metadata commit (crash between the
     data write and the atomic version-hint flip) must be invisible;

@@ -84,6 +84,33 @@ class TestRescale:
         assert len(got) == len(want) > 0
         assert sorted(got["turn_idx"]) == sorted(want["turn_idx"])
 
+    def test_lookup_as_of_rescaled_snapshot_hashes_its_layout(self, spark, log, tmp_path):
+        """A time-travel lookup of a pre-rescale snapshot hashes the key
+        with that snapshot's layout: `bucket_of` names the bucket its
+        rows were written under, and the lookup returns them all."""
+        from pyspark.sql import functions as F
+
+        from silk_spark.sources.lake import bucket_of
+
+        table, pipe = _pipeline(spark, log, tmp_path, "lk", n_buckets=8, merge_mode="mor")
+        pipe.run(end_lsn=N_EVENTS, batch_size=1500)
+        pre_snap = table.meta["current_snapshot_id"]
+        table.rescale_buckets(3)
+        full = table.read(as_of_snapshot=pre_snap).toPandas()
+        on_disk = {}
+        for r in (
+            table.scan(resolve=False, as_of_snapshot=pre_snap)
+            .select("conv_id", F.regexp_extract(F.input_file_name(), r"_bucket=(\d+)", 1).alias("b"))
+            .distinct()
+            .collect()
+        ):
+            on_disk.setdefault(r.conv_id, set()).add(int(r.b))
+        for conv in sorted(set(full["conv_id"]))[:6]:
+            assert on_disk[conv] == {bucket_of(conv, "string", 8)}
+            got = table.lookup(conv, as_of_snapshot=pre_snap).toPandas()
+            assert len(got) == (full["conv_id"] == conv).sum() > 0
+            assert len(table.lookup(conv).toPandas()) == len(got)
+
     def test_rollback_across_rescale_restores_layout(self, spark, log, tmp_path):
         table, pipe = _pipeline(spark, log, tmp_path, "e", n_buckets=8)
         pipe.run(end_lsn=2000, batch_size=1000)
