@@ -23,6 +23,8 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from silk_spark.schema import quote
+
 
 def latest_by_key(
     df: DataFrame,
@@ -32,13 +34,16 @@ def latest_by_key(
     """Keep the single latest row per key, max-by the `order` tuple
     (lexicographic struct comparison). Output column set == input's."""
     keys = list(keys)
-    order = list(order)
-    payload = [c for c in df.columns if c not in keys]
-    version = F.struct(*[F.col(c) for c in order])
+    cols = df.columns
+    payload = ", ".join(quote(c) for c in cols if c not in keys)
+    version = ", ".join(quote(c) for c in order)
+    # SQL strings, not per-column Column calls (a Py4J round trip each)
     agg = df.groupBy(*keys).agg(
-        F.max_by(F.struct(*[F.col(c) for c in payload]), version).alias("_latest")
+        F.expr(f"max_by(struct({payload}), struct({version})) AS _latest")
     )
-    return agg.select(*keys, *[F.col(f"_latest.{c}").alias(c) for c in payload]).select(*df.columns)
+    return agg.selectExpr(
+        *(quote(c) if c in keys else f"_latest.{quote(c)} AS {quote(c)}" for c in cols)
+    )
 
 
 def latest_by_key_window(

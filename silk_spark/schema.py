@@ -12,10 +12,10 @@ ValueType catalog (silk-core/.../entity/ValueType.scala:57-125).
 from __future__ import annotations
 
 import json
+from collections.abc import Iterable
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame, SparkSession
 
 # legal type widenings (Iceberg evolution rules)
 WIDENINGS = {
@@ -64,8 +64,11 @@ class TableSchema:
     def from_dict(d: dict) -> "TableSchema":
         return TableSchema(d["schema_id"], [ColumnSpec(**c) for c in d["columns"]])
 
+    def fields(self) -> list[tuple[str, str]]:
+        return [(c.name, c.dtype) for c in self.columns]
+
     def ddl(self) -> str:
-        return ", ".join(f"{c.name} {c.dtype}" for c in self.columns)
+        return ", ".join(f"{n} {t}" for n, t in self.fields())
 
 
 class SchemaRegistry:
@@ -126,14 +129,30 @@ class SchemaRegistry:
         return json.dumps(self.to_dict())
 
 
+def quote(name: str) -> str:
+    """`name` as a SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def align_to_schema(df: DataFrame, schema: TableSchema) -> DataFrame:
     """Project a DataFrame onto `schema`: missing columns -> typed NULL,
     present columns -> cast to the (possibly widened) target type.
-    This is the column-ID-mapped read of old data files."""
-    cols = []
-    for c in schema.columns:
-        if c.name in df.columns:
-            cols.append(F.col(c.name).cast(c.dtype).alias(c.name))
-        else:
-            cols.append(F.lit(None).cast(c.dtype).alias(c.name))
-    return df.select(*cols)
+    This is the column-ID-mapped read of old data files. Built from
+    one SQL string: per-column Column calls are a Py4J round trip each,
+    paid on every lookup, scan, compaction and merge."""
+    present = set(df.columns)
+    return df.selectExpr(
+        *(
+            f"CAST({quote(c.name) if c.name in present else 'NULL'} AS {c.dtype})"
+            f" AS {quote(c.name)}"
+            for c in schema.columns
+        )
+    )
+
+
+def empty_frame(spark: SparkSession, columns: Iterable[tuple[str, str]]) -> DataFrame:
+    """A zero-row frame of `columns` [(name, dtype)], planned as an
+    empty JVM-local relation: running it launches no job and, unlike
+    `createDataFrame([], ddl)`, no Python worker tasks."""
+    cols = ", ".join(f"CAST(NULL AS {t}) AS {quote(n)}" for n, t in columns)
+    return spark.sql(f"SELECT {cols} LIMIT 0")

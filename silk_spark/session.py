@@ -4,6 +4,15 @@ Defaults follow the 100TB-scale posture scaled to the sandbox:
 AQE on (runtime re-planning + skew-join), shuffle partitions ~ cores,
 Arrow enabled for the pandas-UDF slow path, UTC session timezone so
 results compare exactly against the DuckDB oracle.
+
+File listing stays on the driver. A table read passes the manifest's
+file paths to `spark.read.parquet(*paths)`; above
+`spark.sql.sources.parallelPartitionDiscovery.threshold` paths (32 by
+default) Spark lists them with a distributed job of one task per path.
+The paths come from the manifest, so there is nothing to discover, and
+the master is always `local[N]`: that job's tasks stat the same local
+files on the same cores, plus about 1 s of scheduling for a 192-file
+compaction. `LISTING_THRESHOLD` keeps every listing a driver-side stat.
 """
 
 from __future__ import annotations
@@ -13,6 +22,8 @@ import os
 from pyspark.sql import SparkSession
 
 DEFAULT_CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+# paths listed on the driver before Spark lists with a job (module docstring)
+LISTING_THRESHOLD = 1 << 20
 
 
 def default_driver_mem() -> str:
@@ -52,6 +63,10 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
         .config("spark.sql.parquet.compression.codec", "snappy")
+        .config(
+            "spark.sql.sources.parallelPartitionDiscovery.threshold",
+            str(LISTING_THRESHOLD),
+        )
         # floor for widening narrow scans ahead of CPU-heavy per-row
         # expression work (dedup shingles, stringmap coordinates);
         # operators check inputFiles() count against it — see

@@ -45,7 +45,13 @@ from pyspark.sql import functions as F
 
 from silk_spark.functions.xxh64 import xxh64
 from silk_spark.operators.dedup import latest_by_key
-from silk_spark.schema import SchemaRegistry, TableSchema, align_to_schema
+from silk_spark.schema import (
+    SchemaRegistry,
+    TableSchema,
+    align_to_schema,
+    empty_frame,
+    quote,
+)
 
 def _bucket_stats_from_footers(snap_dir: str) -> tuple[list[int], dict]:
     """Per-bucket row counts from the written parquet footers — local
@@ -83,7 +89,7 @@ VERSION_ORDER = ["ts", "lsn"]
 
 def bucket_expr(col: str, n_buckets: int) -> F.Column:
     """Stable hash bucket for a key column (Iceberg bucket-transform analogue)."""
-    return F.pmod(F.xxhash64(F.col(col)), F.lit(n_buckets)).cast("int")
+    return F.expr(f"CAST(pmod(xxhash64({quote(col)}), {int(n_buckets)}) AS INT)")
 
 
 def bucket_of(key_value, dtype: str, n_buckets: int) -> int:
@@ -100,13 +106,20 @@ def bucket_of(key_value, dtype: str, n_buckets: int) -> int:
     return (h - (1 << 64) if h >> 63 else h) % n_buckets
 
 
-def write_buckets(df: DataFrame, path: str, sort_cols: tuple[str, ...] = ()) -> None:
-    """Write `df` under `path`/_bucket=<b>/, one file per bucket. The
-    exchange hashes on `_bucket` alone, so each bucket lands in exactly
-    one task; with no partition count given, AQE sizes the stage from
-    the data and the session's parallelism (about one writer task per
-    core) instead of one task per bucket."""
-    out = df.repartition("_bucket")
+def write_buckets(
+    df: DataFrame, path: str, n_buckets: int, sort_cols: tuple[str, ...] = ()
+) -> None:
+    """Write `df` under `path`/_bucket=<b>/, one file per bucket, from
+    one writer task per core. The exchange hashes on `_bucket` alone
+    into min(n_buckets, cores) partitions, so each bucket lands in
+    exactly one task. The count is explicit because AQE does not
+    coalesce an explicit count: left to AQE, a small batch's shuffle
+    fell below its 1 MB partition minimum and one task wrote all 64
+    bucket files. A parquet file costs about 15-20 ms whatever its
+    size, so this stage is bound by its file count and needs every
+    core."""
+    cores = df.sparkSession.sparkContext.defaultParallelism
+    out = df.repartition(min(n_buckets, cores), "_bucket")
     if sort_cols:
         out = out.sortWithinPartitions(*sort_cols)
     out.write.mode("overwrite").partitionBy("_bucket").parquet(path)
@@ -348,8 +361,7 @@ class LakeTable:
                     v for v in registry.versions if v.schema_id == snap_sid
                 )
         if not all_files:
-            empty_ddl = schema.ddl() + ", _bucket int"
-            return self.spark.createDataFrame([], empty_ddl)
+            return empty_frame(self.spark, schema.fields() + [("_bucket", "int")])
         # Column-ID mapped read: every data file records the schema_id it
         # was written under; each schema-version group is read with EXACTLY
         # that version's schema (explicit read schema — no footer inference,
@@ -402,7 +414,7 @@ class LakeTable:
         if resolve:
             aligned = latest_by_key(aligned, meta["key_cols"], meta["version_cols"])
         if not with_tombstones and "op" in schema.names():
-            aligned = aligned.filter((F.col("op").isNull()) | (F.col("op") != "D"))
+            aligned = aligned.filter("op IS NULL OR op != 'D'")
         return aligned
 
     def read(self, as_of_snapshot: int | None = None) -> DataFrame:
@@ -488,7 +500,7 @@ class LakeTable:
         registry = self.registry
         schema = self.schema
         if not added:
-            return self.spark.createDataFrame([], schema.ddl())
+            return empty_frame(self.spark, schema.fields())
         version_by_id = {s.schema_id: s for s in registry.versions}
         parts = []
         for sid, paths in sorted(added.items(), key=lambda kv: (kv[0] is None, kv[0] or 0)):
@@ -654,7 +666,7 @@ class LakeTable:
                 rows_deleted = int(obs.get["deletes"] or 0)
                 partition_stats = {"*": rows_in_batch}
             else:
-                write_buckets(out, snap_dir)
+                write_buckets(out, snap_dir, n_buckets)
                 rows_in_batch = int(obs.get["rows"] or 0)
                 rows_deleted = int(obs.get["deletes"] or 0)
                 changed_buckets, partition_stats = _bucket_stats_from_footers(snap_dir)
@@ -680,7 +692,7 @@ class LakeTable:
                 out = latest_by_key(
                     base.unionByName(changes, allowMissingColumns=True), keys, order
                 )
-                write_buckets(out, snap_dir)
+                write_buckets(out, snap_dir, n_buckets)
             changes.unpersist()
 
         # build new file manifest: COW replaces touched buckets' files,
@@ -807,7 +819,10 @@ class LakeTable:
         # maintenance rewrites pay the sort — the hot MOR append path
         # stays exchange-free.
         write_buckets(
-            out, snap_dir, ("_bucket", *(c for c in meta["key_cols"] if c in out.columns))
+            out,
+            snap_dir,
+            n_buckets,
+            ("_bucket", *(c for c in meta["key_cols"] if c in out.columns)),
         )
         files = {}
         for entry in sorted(os.listdir(snap_dir)):

@@ -69,11 +69,14 @@ def stream_changelog(
     )
 
     def handle(batch_df, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
+        # one job for emptiness and bounds
         bounds = batch_df.agg(
-            F.min("lsn").alias("lo"), F.max("lsn").alias("hi")
+            F.count(F.lit(1)).alias("n"), F.min("lsn").alias("lo"), F.max("lsn").alias("hi")
         ).first()
+        if bounds["n"] == 0:
+            return
+        if bounds["lo"] is None:  # skipping would silently drop the batch
+            raise ValueError(f"stream batch {batch_id} has rows but no lsn")
         if pre_merge is not None:
             batch_df = pre_merge(batch_df)
         # set by Spark on the thread that runs this query's batches

@@ -217,3 +217,74 @@ def test_two_process_cas_race(spark, tmp_path_factory):
     want = normalize(final_state_oracle(log.toPandas()))
     got = normalize(t.read().toPandas())
     pd.testing.assert_frame_equal(got, want)
+
+
+# ---------- a crash between the data write and the metadata CAS ----------
+
+
+class CrashBeforeCasIO(LocalMetadataIO):
+    """Local metadata IO whose next try_create, once armed, raises
+    instead of creating: a committer that dies after writing its data
+    files and before the CAS that would publish them."""
+
+    armed = False
+
+    def try_create(self, name: str, text: str) -> bool:
+        if self.armed:
+            self.armed = False
+            raise OSError(f"injected crash before the CAS of {name}")
+        return super().try_create(name, text)
+
+
+def _parquet_files(root):
+    return {
+        os.path.join(dp, f)
+        for dp, _dn, fn in os.walk(os.path.join(root, "data"))
+        for f in fn
+        if f.endswith(".parquet")
+    }
+
+
+@pytest.mark.parametrize("mode", ["cow", "mor"])
+def test_crash_between_data_write_and_cas(spark, log, tmp_path_factory, mode):
+    """The torn commit leaves the table, its ledger and verify()
+    untouched; a resumed pipeline applies the batch exactly once; and
+    remove_orphans() deletes exactly the torn commit's files."""
+    from silk_spark.streaming.pipeline import CdcPipeline
+
+    base = str(tmp_path_factory.mktemp(f"torn_{mode}"))
+    root = os.path.join(base, "t")
+    io = CrashBeforeCasIO(os.path.join(root, "metadata"))
+    t = create_transcripts_table(spark, root, n_buckets=8, merge_mode=mode, meta_io=io)
+    CdcPipeline(spark, t, None, changelog=log).run(end_lsn=1200, batch_size=400, stop_after=1)
+    before_meta = LakeTable(spark, root).meta
+    before_files = _parquet_files(root)
+
+    io.armed = True
+    with pytest.raises(OSError, match="injected crash"):
+        CdcPipeline(spark, t, None, changelog=log).run(end_lsn=1200, batch_size=400)
+    torn = _parquet_files(root) - before_files
+    assert torn  # the data write ran before the failed CAS
+
+    fresh = LakeTable(spark, root)
+    assert fresh.meta == before_meta
+    assert t.meta == before_meta
+    assert fresh.verify()["ok"]
+    got = normalize(fresh.read().toPandas())
+    pd.testing.assert_frame_equal(got, normalize(final_state_oracle(_slice(log, 0, 400).toPandas())))
+
+    pipe = CdcPipeline(spark, t.refresh(), None, changelog=log)
+    assert pipe.resume_lsn() == 400
+    applied = pipe.run(end_lsn=1200, batch_size=400)
+    assert [s["batch_id"] for s in applied] == ["lsn-400-800", "lsn-800-1200"]
+    assert not any(s.get("skipped") for s in applied)
+    ledger = LakeTable(spark, root).meta["committed_batches"]
+    assert ledger == ["lsn-0-400", "lsn-400-800", "lsn-800-1200"]
+    want = normalize(final_state_oracle(log.toPandas()))
+    pd.testing.assert_frame_equal(normalize(t.read().toPandas()), want)
+
+    live = _parquet_files(root) - torn
+    assert t.remove_orphans() == {"files_deleted": len(torn)}
+    assert _parquet_files(root) == live
+    assert t.verify(check_all_snapshots=True)["ok"]
+    pd.testing.assert_frame_equal(normalize(t.read().toPandas()), want)

@@ -282,3 +282,71 @@ def test_reconcile_is_one_slice_scan_and_one_shuffle(spark, tmp_path_factory):
     assert len(shuffles) == 1, plan
     assert "hashpartitioning(conv_id" in shuffles[0]
     assert "Join" not in plan.replace("BroadcastNestedLoopJoin", ""), plan
+
+
+def _stage_rdds(sc, group: str) -> list[str]:
+    """RDD node labels of every stage the job group ran."""
+    import re
+
+    store = sc._jsc.sc().statusStore()
+    graph_cls = sc._jvm.org.apache.spark.ui.scope.RDDOperationGraph
+    tracker = sc.statusTracker()
+    labels = []
+    for job in tracker.getJobIdsForGroup(group):
+        for stage in tracker.getJobInfo(job).stageIds:
+            dot = graph_cls.makeDotFile(store.operationGraphForStage(stage))
+            labels += re.findall(r'label="([^"]*)"', dot)
+    return labels
+
+
+def test_batch_frame_bounds_are_a_broadcast_local_relation(spark, tmp_path_factory):
+    """A path-mode slice joins its rows against a one-row bounds
+    relation that lives in the JVM: a LocalTableScan under the
+    broadcast, no Python-worker stage when it runs, and no lsn literal
+    in any filter (the generated code stays batch-invariant)."""
+    import re
+
+    from silk_spark.datagen import changelog
+    from silk_spark.streaming.pipeline import CdcPipeline
+
+    d = str(tmp_path_factory.mktemp("blog"))
+    changelog(spark, 2000, seed=6).write.mode("overwrite").parquet(d)
+    pipe = CdcPipeline(spark, None, None, changelog_path=d)
+    df = pipe._batch_frame(500, 1500)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    bcast = plan[plan.index("BroadcastExchange"):]
+    assert "LocalTableScan [_lo" in bcast.splitlines()[1], plan
+    assert "ExistingRDD" not in plan, plan
+    assert not re.search(r"lsn#\d+L? (>=|<) \d+", plan), plan
+    sc = spark.sparkContext
+    group = "batch-frame-bounds"
+    sc.setJobGroup(group, "path-mode slice")
+    try:
+        assert df.count() == 1000
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    labels = _stage_rdds(sc, group)
+    assert labels and not any("PythonRDD" in lb for lb in labels), labels
+
+
+def test_manifest_scan_launches_no_listing_job(spark, tmp_path_factory):
+    """Building a scan over more than 32 manifest files (Spark's
+    default parallel-listing threshold) launches no Spark job: the
+    paths come from the manifest, so they are stat'ed on the driver."""
+    from silk_spark.datagen import changelog
+    from silk_spark.streaming.pipeline import create_transcripts_table, project_changes
+
+    t = create_transcripts_table(
+        spark, str(tmp_path_factory.mktemp("listing")), n_buckets=64, merge_mode="mor"
+    )
+    t.merge_batch(project_changes(changelog(spark, 2000, n_convs=200, seed=8)), "b-0")
+    assert sum(len(fs) for fs in t.current_snapshot()["files"].values()) > 32
+    sc = spark.sparkContext
+    group = "manifest-scan"
+    sc.setJobGroup(group, "build a manifest scan")
+    try:
+        df = t.scan()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+    assert df.count() > 0
