@@ -319,11 +319,10 @@ def make_log(n_events: int, root: str | None = None) -> str:
     """Materialize a synthetic change log ONCE (parent process,
     unpinned — setup, not measurement) and share it with every pinned
     merge subprocess. 256 range partitions: a timed batch window
-    overlaps dozens of files, so scan (and, with the unpartitioned
-    layout, write) parallelism covers 32 cores — parquet files are one
-    row group and unsplittable, so file count IS the parallelism
-    bound. Smaller tiers replay an lsn-PREFIX of the big log; footer-
-    stats pruning keeps them from touching the rest."""
+    overlaps dozens of files, so scan parallelism covers 32 cores —
+    parquet files are one row group and unsplittable, so file count IS
+    the parallelism bound. Smaller tiers replay an lsn-PREFIX of the
+    big log; footer-stats pruning keeps them from touching the rest."""
     from silk_spark.datagen import changelog
     from silk_spark.session import get_spark
     import tempfile
@@ -375,7 +374,6 @@ def merge_bench(
     table = create_transcripts_table(
         spark, os.path.join(root, "t"), n_buckets=64,
         merge_mode=os.environ.get("SILK_BENCH_MODE", "mor"),
-        delta_layout=os.environ.get("SILK_BENCH_LAYOUT", "unpartitioned"),
     )
     ckpt = CheckpointStore(os.path.join(root, "cp"))
     pre_merge = None

@@ -252,19 +252,30 @@ def main(argv: list[str] | None = None) -> int:
         idc, txc = args.id_col, args.text_col
         df = spark.read.parquet(args.in_path)
         stages: list[tuple[str, int]] = [("input", df.count())]
+        persisted: list = []
+
+        def counted(name: str, frame):
+            """Count a stage and persist it, so later stages, counts and
+            the write read it instead of recomputing its lineage; the
+            stage before it is then released."""
+            frame = frame.persist()
+            stages.append((name, frame.count()))
+            for prev in persisted:
+                prev.unpersist()
+            persisted[:] = [frame]
+            return frame
+
         if args.exact_dedup:
             keep = ds.exact_dedup(df, txc, idc).select(F.col("keep_id").alias(idc))
-            df = df.join(keep, idc, "left_semi")
-            stages.append(("exact_dedup", df.count()))
+            df = counted("exact_dedup", df.join(keep, idc, "left_semi"))
         if args.near_dedup:
             surv = (
                 ds.near_dup_clusters(df, args.threshold, text_col=txc, id_col=idc)
                 .filter(F.col("is_survivor"))
                 .select(idc)
             )
-            df = df.join(surv, idc, "left_semi")
+            df = counted("near_dedup", df.join(surv, idc, "left_semi"))
             ds.release_persisted(spark)
-            stages.append(("near_dedup", df.count()))
         if args.decontaminate:
             from silk_spark.operators.dedup_suite import decontaminate
 
@@ -273,8 +284,7 @@ def main(argv: list[str] | None = None) -> int:
                 df, bench, window=args.window, text_col=txc, id_col=idc,
                 bench_text_col=txc,
             ).select(F.col("doc_id").alias(idc))
-            df = df.join(flagged, idc, "left_anti")
-            stages.append(("decontaminate", df.count()))
+            df = counted("decontaminate", df.join(flagged, idc, "left_anti"))
         if args.annotate or args.sample:
             df = df.withColumn("lang", lang_id(F.col(txc)))
         if args.annotate:
@@ -290,11 +300,10 @@ def main(argv: list[str] | None = None) -> int:
                 k: float(v)
                 for k, v in (kv.split("=", 1) for kv in args.sample.split(","))
             }
-            df = stratified_sample(
+            df = counted("sample", stratified_sample(
                 df, F.col("lang"), rates, key=F.col(idc), seed=args.seed,
                 default_fraction=args.sample_default,
-            )
-            stages.append(("sample", df.count()))
+            ))
         if args.pack:
             from silk_spark.operators.packing import pack_sequences
 
@@ -303,6 +312,8 @@ def main(argv: list[str] | None = None) -> int:
             ).select(F.col("doc_id").alias(idc), "pack_id")
             df = df.join(assign, idc)
         df.write.mode("overwrite").parquet(args.out)
+        for prev in persisted:
+            prev.unpersist()
         out_rows = spark.read.parquet(args.out).count()
         print(json.dumps({"stages": stages, "out": args.out, "rows": out_rows}))
         return 0

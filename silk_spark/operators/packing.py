@@ -32,6 +32,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 _PACK_STRIDE = 1 << 40
+_INTEGER_TYPES = ("tinyint", "smallint", "int", "bigint")
 
 
 def _whitespace_tokens(c: Column) -> Column:
@@ -47,7 +48,13 @@ def pack_sequences(
 ) -> DataFrame:
     """(doc_id, n_tokens, pack_id) — every document assigned to a
     context window. See module docstring for the exact greedy rule
-    and the determinism contract."""
+    and the determinism contract. `id_col` must be an integer column:
+    it is sharded with pmod and packed as a bigint."""
+    id_type = df.select(id_col).dtypes[0][1]
+    if id_type not in _INTEGER_TYPES:
+        raise TypeError(
+            f"pack_sequences: id column {id_col!r} is {id_type}, not an integer type"
+        )
     cap = int(capacity)
 
     def _pack(pdf: pd.DataFrame) -> pd.DataFrame:

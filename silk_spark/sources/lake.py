@@ -1,4 +1,5 @@
-"""LakeTable: a copy-on-write, hash-bucketed snapshot table on parquet.
+"""LakeTable: a hash-bucketed snapshot table on parquet, merged
+copy-on-write or merge-on-read.
 
 Implements the Iceberg semantics the north rule needs -- atomic
 snapshot commits, batch-id idempotency in the snapshot summary,
@@ -17,20 +18,24 @@ Layout::
 
     <root>/metadata/version-hint.text     # current metadata version (atomic pointer)
     <root>/metadata/v<k>.metadata.json    # schemas + snapshot log + file manifest
-    <root>/data/snap-<sid>/_bucket=<b>/*.parquet
+    <root>/data/snap-<sid>-<uid>/_bucket=<b>/*.parquet
 
-Copy-on-write MERGE rewrites ONLY the buckets containing changed keys;
-untouched buckets carry their files forward by reference. At 100 TB
-with (say) 4096 buckets, a micro-batch touching 200 conversations
-rewrites ~200/4096 of the table, not all of it. Deletes are kept as
-tombstone rows (op='D') so the final state is invariant to how the
-change log is sliced into batches; `compact()` drops them.
+Each snapshot's manifest is `files = {"<b>": [[path, schema_id], ...]}`
+plus the `n_buckets` and `schema_id` it was written under;
+`LakeTable.files` is its one reader. A copy-on-write MERGE rewrites
+ONLY the buckets containing changed keys and carries the others
+forward by reference; a merge-on-read MERGE appends the batch as
+per-bucket delta files that scans resolve until `compact()` folds
+them. At 100 TB with (say) 4096 buckets, a micro-batch touching 200
+conversations rewrites ~200/4096 of the table, not all of it. Deletes
+are kept as tombstone rows (op='D') so the final state is invariant to
+how the change log is sliced into batches; `compact()` drops them.
 
 Reference analogue: Silk's EntitySink openTable/writeEntity/closeTable
-(/root/reference/silk-core/src/main/scala/org/silkframework/dataset/
-EntitySink.scala:12-50) and FileEntityCache block/partition layout
+(silk-core/src/main/scala/org/silkframework/dataset/EntitySink.scala:12-50)
+and FileEntityCache block/partition layout
 (silk-core/.../cache/FileEntityCache.scala:41-58, blocks=101 default at
-config/Blocking.scala:40) -- reborn as bucketed COW snapshots.
+config/Blocking.scala:40) -- reborn as bucketed snapshots.
 """
 
 from __future__ import annotations
@@ -39,6 +44,9 @@ import json
 import os
 import shutil
 import uuid
+from concurrent.futures import ThreadPoolExecutor
+from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -52,35 +60,6 @@ from silk_spark.schema import (
     empty_frame,
     quote,
 )
-
-def _bucket_stats_from_footers(snap_dir: str) -> tuple[list[int], dict]:
-    """Per-bucket row counts from the written parquet footers — local
-    metadata reads (thread-pooled), no Spark job."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    import pyarrow.parquet as pq
-
-    changed, stats = [], {}
-    if not os.path.isdir(snap_dir):
-        return changed, stats
-
-    def count_bucket(entry: str) -> tuple[str, int]:
-        b = entry.split("=", 1)[1]
-        bdir = os.path.join(snap_dir, entry)
-        n = sum(
-            pq.ParquetFile(os.path.join(bdir, f)).metadata.num_rows
-            for f in os.listdir(bdir)
-            if f.endswith(".parquet")
-        )
-        return b, n
-
-    entries = [e for e in os.listdir(snap_dir) if e.startswith("_bucket=")]
-    with ThreadPoolExecutor(max_workers=16) as pool:
-        for b, n in pool.map(count_bucket, entries):
-            if n > 0:
-                changed.append(int(b))
-                stats[b] = n
-    return sorted(changed), stats
 
 
 KEYS = ["conv_id", "turn_idx"]
@@ -125,9 +104,60 @@ def write_buckets(
     out.write.mode("overwrite").partitionBy("_bucket").parquet(path)
 
 
+def written_buckets(
+    path: str, count_rows: bool = False
+) -> tuple[dict[int, list[str]], dict[str, int]]:
+    """The parquet files `write_buckets` left under `path`, per bucket,
+    and with `count_rows` each bucket's row count from the file footers
+    (thread-pooled local metadata reads, no Spark job). Only buckets
+    with rows have a dir; an empty write may leave no `path` at all."""
+    files: dict[int, list[str]] = {}
+    for entry in os.listdir(path) if os.path.isdir(path) else []:
+        if entry.startswith("_bucket="):
+            bdir = os.path.join(path, entry)
+            files[int(entry.split("=", 1)[1])] = [
+                os.path.join(bdir, f) for f in sorted(os.listdir(bdir)) if f.endswith(".parquet")
+            ]
+    files = dict(sorted(files.items()))
+    rows: dict[str, int] = {}
+    if count_rows:
+        import pyarrow.parquet as pq
+
+        def count(paths: list[str]) -> int:
+            return sum(pq.ParquetFile(p).metadata.num_rows for p in paths)
+
+        with ThreadPoolExecutor(max_workers=16) as pool:
+            rows = dict(zip(map(str, files), pool.map(count, files.values())))
+    return files, rows
+
+
+@dataclass(frozen=True)
+class FileSet:
+    """One snapshot's data files as `LakeTable.files` read them:
+    (bucket, path, schema_id) entries, the bucket count the snapshot
+    was written under and the schema it reads with."""
+
+    entries: list[tuple[int, str, int]]
+    n_buckets: int
+    schema: TableSchema
+
+    def __iter__(self):
+        return iter(self.entries)
+
+    def paths(self) -> set[str]:
+        return {p for _b, p, _sid in self.entries}
+
+    def manifest(self) -> dict[str, list]:
+        """The entries in the on-disk form: {"<b>": [[path, schema_id], ...]}."""
+        out: dict[str, list] = {}
+        for b, p, sid in self.entries:
+            out.setdefault(str(b), []).append([p, sid])
+        return out
+
+
 class LakeTable:
-    """Copy-on-write table with snapshot isolation and optimistic
-    multi-writer concurrency.
+    """Copy-on-write or merge-on-read table with snapshot isolation
+    and optimistic multi-writer concurrency.
 
     Metadata commits go through a `MetadataIO` backend (sources/io.py):
     local atomic-rename/CAS by default, in-memory fake for tests,
@@ -160,16 +190,8 @@ class LakeTable:
         n_buckets: int = 32,
         merge_mode: str = "cow",
         meta_io=None,
-        delta_layout: str = "bucketed",
     ) -> "LakeTable":
-        """`delta_layout` (MOR only): "bucketed" shuffles each batch
-        into the bucket layout at write time; "unpartitioned" appends
-        the batch AS SCANNED — zero exchanges, the high-rate ingest
-        layout (Hudi/Paimon-style append) — and `compact()` re-clusters
-        the global deltas into buckets. Unpartitioned deltas cannot be
-        bucket-pruned until compacted (manifest bucket key "*")."""
         assert merge_mode in ("cow", "mor")
-        assert delta_layout in ("bucketed", "unpartitioned")
         t = LakeTable(spark, root, meta_io=meta_io)
         os.makedirs(t.meta_dir, exist_ok=True)
         os.makedirs(t.data_dir, exist_ok=True)
@@ -180,7 +202,6 @@ class LakeTable:
             "version_cols": version_cols or VERSION_ORDER,
             "n_buckets": n_buckets,
             "merge_mode": merge_mode,
-            "delta_layout": delta_layout,
             "registry": registry.to_dict(),
             "current_snapshot_id": None,
             "snapshots": [],
@@ -306,19 +327,75 @@ class LakeTable:
             {k: v for k, v in s.items() if k != "files"} for s in self.meta["snapshots"]
         ]
 
-    def _bucket_files(self, as_of_snapshot: int | None = None) -> dict[str, list]:
-        """Manifest entries per bucket: [path, schema_id] pairs (legacy
-        plain-string entries read as schema_id=None)."""
-        if as_of_snapshot is not None:
-            return self._snapshot(as_of_snapshot)["files"]
-        snap = self.current_snapshot()
-        return {} if snap is None else snap["files"]
+    def files(
+        self,
+        snapshot: "int | str | dict | None" = None,
+        buckets: list[int] | None = None,
+    ) -> FileSet:
+        """The one reader of the file manifest: the files of `snapshot`
+        (an id, a tag, a snapshot record, or None for the current one),
+        optionally limited to a bucket subset, with the bucket count and
+        schema to read them with. The current table reads with the
+        registry's current schema, an older snapshot with its own.
 
-    @staticmethod
-    def _file_entry(entry) -> tuple[str, int | None]:
-        if isinstance(entry, str):
-            return entry, None
-        return entry[0], entry[1]
+        It is also the one check of the manifest format, over the whole
+        snapshot even when pruned: a bucket key that is not a bucket id
+        of the snapshot's layout, an entry that is not [path, schema_id]
+        of a known schema, or a snapshot without `n_buckets` and
+        `schema_id` raises ValueError. A pruned read would otherwise
+        skip such files and silently drop their rows."""
+        if isinstance(snapshot, dict):
+            snap = snapshot
+        else:
+            sid = self.resolve_ref(snapshot)
+            snap = self.current_snapshot() if sid is None else self._snapshot(sid)
+        if snap is None:
+            return FileSet([], self.meta["n_buckets"], self.schema)
+        versions = {v.schema_id: v for v in self.registry.versions}
+        where = f"snapshot {snap['snapshot_id']} of table {self.root}"
+        n_buckets = snap.get("n_buckets")
+        if not isinstance(n_buckets, int) or snap.get("schema_id") not in versions:
+            raise ValueError(f"{where} records no bucket count or no known schema_id")
+        entries = []
+        for key, fs in snap["files"].items():
+            if not (key.isdigit() and int(key) < n_buckets):
+                raise ValueError(
+                    f"{where}: manifest key {key!r} is not a bucket of its "
+                    f"{n_buckets}-bucket layout"
+                )
+            for e in fs:
+                if not (isinstance(e, list) and len(e) == 2 and e[1] in versions):
+                    raise ValueError(
+                        f"{where}: manifest entry {e!r} is not [path, schema_id]"
+                    )
+                entries.append((int(key), e[0], e[1]))
+        if buckets is not None:
+            wanted = {int(b) for b in buckets}
+            entries = [e for e in entries if e[0] in wanted]
+        schema = self.schema if snapshot is None else versions[snap["schema_id"]]
+        return FileSet(entries, n_buckets, schema)
+
+    def _read_files(self, entries: list[tuple[int, str, int]], schema: TableSchema) -> DataFrame:
+        """Read manifest entries as one frame in `schema`: the column-ID
+        mapped read. Each schema-version group is read with EXACTLY that
+        version's schema (explicit read schema — no footer inference),
+        then projected onto `schema` with Column casts (missing column
+        -> typed NULL, widened type -> cast; date->timestamp etc. is
+        legal as an expression but NOT inside the parquet reader).
+        Inferring instead would let a lexicographically-first
+        old-schema file silently NULL an evolved column for every row.
+        No basePath/partition inference either: MOR delta files for one
+        bucket live under several snap-N dirs, which Spark's dir
+        inference rejects."""
+        by_sid: dict[int, list[str]] = {}
+        for _b, path, sid in entries:
+            by_sid.setdefault(sid, []).append(path)
+        versions = {v.schema_id: v for v in self.registry.versions}
+        parts = [
+            align_to_schema(self.spark.read.schema(versions[sid].ddl()).parquet(*paths), schema)
+            for sid, paths in sorted(by_sid.items())
+        ]
+        return reduce(DataFrame.unionByName, parts)
 
     def scan(
         self,
@@ -341,79 +418,24 @@ class LakeTable:
         and manifests cumulative, so this is pure metadata selection,
         no data copies (Iceberg `VERSION AS OF` semantics). A string
         `as_of_snapshot` resolves through the tag map."""
-        as_of_snapshot = self.resolve_ref(as_of_snapshot)
         meta = self.meta
         if resolve is None:
-            resolve = meta.get("merge_mode", "cow") == "mor"
-        files_by_bucket = self._bucket_files(as_of_snapshot)
-        if buckets is not None:
-            # "*" = unpartitioned delta files: they may hold rows of ANY
-            # bucket, so every bucket-subset read must include them
-            wanted = {str(b) for b in buckets} | {"*"}
-            files_by_bucket = {b: fs for b, fs in files_by_bucket.items() if b in wanted}
-        all_files = [self._file_entry(e) for fs in files_by_bucket.values() for e in fs]
-        registry = self.registry
-        schema = self.schema
-        if as_of_snapshot is not None:
-            snap_sid = self._snapshot(as_of_snapshot).get("schema_id")
-            if snap_sid is not None:
-                schema = next(
-                    v for v in registry.versions if v.schema_id == snap_sid
-                )
-        if not all_files:
-            return empty_frame(self.spark, schema.fields() + [("_bucket", "int")])
-        # Column-ID mapped read: every data file records the schema_id it
-        # was written under; each schema-version group is read with EXACTLY
-        # that version's schema (explicit read schema — no footer inference,
-        # no mergeSchema driver cost), then projected onto the current
-        # schema with Column casts (missing column -> typed NULL, widened
-        # type -> cast; date->timestamp etc. is legal as an expression but
-        # NOT inside the parquet reader). Inferring instead would let a
-        # lexicographically-first old-schema file silently NULL an evolved
-        # column for every row.
-        # No basePath/partition inference either — MOR delta files for
-        # one bucket live under several snap-N dirs, which Spark's dir
-        # inference rejects; _bucket is recomputed from the key hash
-        # (deterministic, same expression the writer used).
-        by_sid: dict[int | None, list[str]] = {}
-        for path, sid in all_files:
-            by_sid.setdefault(sid, []).append(path)
-        version_by_id = {s.schema_id: s for s in registry.versions}
-        parts = []
-        for sid, paths in sorted(by_sid.items(), key=lambda kv: (kv[0] is None, kv[0] or 0)):
-            if sid is not None and sid in version_by_id:
-                df = self.spark.read.schema(version_by_id[sid].ddl()).parquet(*paths)
-            else:  # legacy manifest entry without schema_id: merge footers
-                df = self.spark.read.option("mergeSchema", "true").parquet(*paths)
-            parts.append(align_to_schema(df, schema))
-        df = parts[0]
-        for p in parts[1:]:
-            df = df.unionByName(p)
-        # bucket by the layout the snapshot being read was WRITTEN
-        # under (snapshots record n_buckets; rescale_buckets changes it
-        # going forward) — time travel across a rescale must interpret
-        # the old manifest's bucket keys with the old bucket function
-        snap_rec = (
-            self._snapshot(as_of_snapshot)
-            if as_of_snapshot is not None
-            else self.current_snapshot()
-        ) or {}
-        eff_n_buckets = snap_rec.get("n_buckets", meta["n_buckets"])
-        aligned = df.withColumn(
-            "_bucket", bucket_expr(meta["key_cols"][0], eff_n_buckets)
+            resolve = meta["merge_mode"] == "mor"
+        fs = self.files(as_of_snapshot, buckets)
+        if not fs.entries:
+            return empty_frame(self.spark, fs.schema.fields() + [("_bucket", "int")])
+        # _bucket is recomputed from the key hash with the layout the
+        # snapshot was WRITTEN under (rescale_buckets changes it going
+        # forward): time travel across a rescale interprets the old
+        # manifest's bucket keys with the old bucket function. A file
+        # holds only rows of its own bucket, so a pruned scan needs no
+        # filter on it.
+        aligned = self._read_files(fs.entries, fs.schema).withColumn(
+            "_bucket", bucket_expr(meta["key_cols"][0], fs.n_buckets)
         )
-        if buckets is not None:
-            # unpartitioned ("*") delta files carry rows of EVERY bucket;
-            # after recomputing _bucket, drop the out-of-scope ones so the
-            # pruned-scan contract holds (those keys' base-bucket files
-            # were pruned above — resolving them against deltas alone
-            # would surface stale versions)
-            aligned = aligned.filter(
-                F.col("_bucket").isin([int(b) for b in buckets])
-            )
         if resolve:
             aligned = latest_by_key(aligned, meta["key_cols"], meta["version_cols"])
-        if not with_tombstones and "op" in schema.names():
+        if not with_tombstones and "op" in fs.schema.names():
             aligned = aligned.filter("op IS NULL OR op != 'D'")
         return aligned
 
@@ -428,29 +450,19 @@ class LakeTable:
         """Point lookup by the bucketing key (key_cols[0]): prune the
         scan to the ONE bucket the key hashes into, then push the key
         equality into the parquet scan. On a 4096-bucket 100 TB table
-        this touches 1/4096 of the files (plus any not-yet-compacted
-        unpartitioned deltas) instead of all of them — the serving-path
-        read. The bucket id is hashed on the driver (`bucket_of`: the
-        writer's xxhash64 over the key column's declared type), not by a
-        Spark job.
+        this touches 1/4096 of the files instead of all of them — the
+        serving-path read. The bucket id is hashed on the driver
+        (`bucket_of`: the writer's xxhash64 over the key column's type
+        in the schema the scan reads with), not by a Spark job.
 
         `as_of_snapshot` (id or tag) time-travels the lookup; the key
         hashes with THAT snapshot's recorded bucket layout, so lookups
         across a rescale_buckets boundary prune to the right bucket."""
-        meta = self.meta
-        key_col = meta["key_cols"][0]
-        sid = self.resolve_ref(as_of_snapshot)
-        snap_rec = (self._snapshot(sid) if sid is not None else self.current_snapshot()) or {}
-        eff_n_buckets = snap_rec.get("n_buckets", meta["n_buckets"])
-        # the key's type in the schema scan() reads that snapshot with
-        versions = {v.schema_id: v for v in self.registry.versions}
-        dtype = versions.get(snap_rec.get("schema_id"), self.schema).by_name(key_col).dtype
+        key_col = self.meta["key_cols"][0]
+        fs = self.files(as_of_snapshot)
+        bucket = bucket_of(key_value, fs.schema.by_name(key_col).dtype, fs.n_buckets)
         return (
-            self.scan(
-                buckets=[bucket_of(key_value, dtype, eff_n_buckets)],
-                with_tombstones=False,
-                as_of_snapshot=sid,
-            )
+            self.scan(buckets=[bucket], with_tombstones=False, as_of_snapshot=as_of_snapshot)
             .filter(F.col(key_col) == F.lit(key_value))
             .drop("_bucket")
         )
@@ -487,32 +499,11 @@ class LakeTable:
                 f"delta-append; found {[(s['snapshot_id'], s['operation']) for s in bad]}"
                 " — use snapshot_diff() across rewrites"
             )
-        base = {
-            p
-            for fs in self._bucket_files(from_snapshot).values()
-            for p, _ in map(self._file_entry, fs)
-        }
-        added: dict[int | None, list[str]] = {}
-        for fs in self._bucket_files(to_snapshot).values():
-            for p, sid in map(self._file_entry, fs):
-                if p not in base:
-                    added.setdefault(sid, []).append(p)
-        registry = self.registry
-        schema = self.schema
+        base = self.files(from_snapshot).paths()
+        added = [e for e in self.files(to_snapshot) if e[1] not in base]
         if not added:
-            return empty_frame(self.spark, schema.fields())
-        version_by_id = {s.schema_id: s for s in registry.versions}
-        parts = []
-        for sid, paths in sorted(added.items(), key=lambda kv: (kv[0] is None, kv[0] or 0)):
-            if sid is not None and sid in version_by_id:
-                df = self.spark.read.schema(version_by_id[sid].ddl()).parquet(*paths)
-            else:
-                df = self.spark.read.option("mergeSchema", "true").parquet(*paths)
-            parts.append(align_to_schema(df, schema))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+            return empty_frame(self.spark, self.schema.fields())
+        return self._read_files(added, self.schema)
 
     def snapshot_diff(
         self, from_snapshot: int, to_snapshot: int | None = None
@@ -611,7 +602,8 @@ class LakeTable:
         keys = meta["key_cols"]
         order = meta["version_cols"]
         n_buckets = meta["n_buckets"]
-        mode = meta.get("merge_mode", "cow")
+        mode = meta["merge_mode"]
+        files = self.files().manifest()
 
         # schema evolution: add new incoming columns / widen types
         registry = SchemaRegistry.from_dict(meta["registry"])
@@ -652,24 +644,10 @@ class LakeTable:
                 F.count(F.lit(1)).alias("rows"),
                 F.sum(F.when(F.col("op") == "D", 1).otherwise(0)).alias("deletes"),
             )
-            if meta.get("delta_layout", "bucketed") == "unpartitioned":
-                # ZERO-shuffle append: write the batch as scanned (the
-                # only exchange-free plan — scan parallelism flows
-                # straight into the parquet writers). Deltas land under
-                # manifest key "*" and are re-clustered by compact().
-                out.drop("_bucket").write.mode("overwrite").parquet(snap_dir)
-                changed_buckets = ["*"]
-                # obs.get LAST: it blocks on the async listener bus
-                # (~100-500 ms after job end); done after the local
-                # bookkeeping the wait overlaps it
-                rows_in_batch = int(obs.get["rows"] or 0)
-                rows_deleted = int(obs.get["deletes"] or 0)
-                partition_stats = {"*": rows_in_batch}
-            else:
-                write_buckets(out, snap_dir, n_buckets)
-                rows_in_batch = int(obs.get["rows"] or 0)
-                rows_deleted = int(obs.get["deletes"] or 0)
-                changed_buckets, partition_stats = _bucket_stats_from_footers(snap_dir)
+            write_buckets(out, snap_dir, n_buckets)
+            rows_in_batch = int(obs.get["rows"] or 0)
+            rows_deleted = int(obs.get["deletes"] or 0)
+            written, partition_stats = written_buckets(snap_dir, count_rows=True)
         else:
             # COW needs the touched-bucket set BEFORE it can scan the
             # base side, so it is inherently two jobs; cache the deduped
@@ -683,32 +661,24 @@ class LakeTable:
                 )
                 .collect()
             )
-            changed_buckets = sorted(int(r["_bucket"]) for r in stats_rows)
             partition_stats = {str(r["_bucket"]): int(r["rows"]) for r in stats_rows}
             rows_in_batch = sum(partition_stats.values())
             rows_deleted = int(sum(r["deletes"] for r in stats_rows))
-            if changed_buckets:
-                base = self.scan(buckets=changed_buckets)
+            if stats_rows:
+                base = self.scan(buckets=[r["_bucket"] for r in stats_rows])
                 out = latest_by_key(
                     base.unionByName(changes, allowMissingColumns=True), keys, order
                 )
                 write_buckets(out, snap_dir, n_buckets)
             changes.unpersist()
+            written, _ = written_buckets(snap_dir)
 
-        # build new file manifest: COW replaces touched buckets' files,
-        # MOR appends delta files to them ("*" = unpartitioned deltas)
-        files = {b: list(fs) for b, fs in self._bucket_files().items()}
-        for b in changed_buckets:
-            bdir = snap_dir if b == "*" else os.path.join(snap_dir, f"_bucket={b}")
-            new_files = [
-                [os.path.join(bdir, f), schema.schema_id]
-                for f in sorted(os.listdir(bdir))
-                if f.endswith(".parquet")
-            ]
-            if mode == "mor":
-                files[str(b)] = files.get(str(b), []) + new_files
-            else:
-                files[str(b)] = new_files
+        # new file manifest: COW replaces touched buckets' files, MOR
+        # appends delta files to them
+        for b, paths in written.items():
+            new_files = [[p, schema.schema_id] for p in paths]
+            old_files = files.get(str(b), []) if mode == "mor" else []
+            files[str(b)] = old_files + new_files
 
         summary = {
             "snapshot_id": snap_id,
@@ -718,7 +688,7 @@ class LakeTable:
             "schema_id": schema.schema_id,
             "rows_in_batch": rows_in_batch,
             "rows_deleted": rows_deleted,
-            "buckets_rewritten": len(changed_buckets),
+            "buckets_rewritten": len(written),
             "partition_stats": partition_stats,
             "n_buckets": n_buckets,
         }
@@ -764,8 +734,8 @@ class LakeTable:
         idempotency ledger is untouched — replayed batches still skip).
         Time travel stays sound: every snapshot records the layout it
         was written under and scan() buckets by THAT, not by the
-        current one. MOR unpartitioned deltas ("*") are folded into
-        real buckets as a side effect (same as compact).
+        current one. MOR deltas are folded as a side effect (same as
+        compact).
 
         Reference analogue: silk-core partitioning is fixed per run
         (workspace/activity config); growing it is exactly what the
@@ -780,19 +750,6 @@ class LakeTable:
                 "n_buckets": new_n,
                 "snapshot_id": self.meta["current_snapshot_id"],
             }
-        # legacy tables: snapshots written before layouts were recorded
-        # per-snapshot carry no 'n_buckets' — scan()'s fallback for
-        # those is the CURRENT meta value, which after this rescale
-        # would be the NEW count, silently misbucketing time-travel
-        # reads of old snapshots. Backfill the pre-rescale layout onto
-        # them in a metadata-only commit BEFORE switching layouts.
-        if any("n_buckets" not in s for s in self.meta["snapshots"]):
-            meta = dict(self.meta)
-            meta["snapshots"] = [
-                s if "n_buckets" in s else {**s, "n_buckets": meta["n_buckets"]}
-                for s in meta["snapshots"]
-            ]
-            self._write_meta(meta, version=self._meta_version + 1)
         resolved = self.scan(with_tombstones=True).drop("_bucket")
         return self._rewrite(
             resolved, f"rescale-{uuid.uuid4().hex[:8]}", "rescale", new_n
@@ -816,24 +773,15 @@ class LakeTable:
         # cluster each bucket's file by key: parquet min/max column
         # stats then let point lookups and key-range scans skip row
         # groups inside a bucket (Iceberg sort-order analogue). Only
-        # maintenance rewrites pay the sort — the hot MOR append path
-        # stays exchange-free.
+        # maintenance rewrites pay the sort.
         write_buckets(
             out,
             snap_dir,
             n_buckets,
             ("_bucket", *(c for c in meta["key_cols"] if c in out.columns)),
         )
-        files = {}
-        for entry in sorted(os.listdir(snap_dir)):
-            if entry.startswith("_bucket="):
-                b = entry.split("=", 1)[1]
-                bdir = os.path.join(snap_dir, entry)
-                files[b] = [
-                    [os.path.join(bdir, f), schema.schema_id]
-                    for f in sorted(os.listdir(bdir))
-                    if f.endswith(".parquet")
-                ]
+        written, _ = written_buckets(snap_dir)
+        files = {str(b): [[p, schema.schema_id] for p in ps] for b, ps in written.items()}
         summary = {
             "snapshot_id": snap_id,
             "parent_id": meta["current_snapshot_id"],
@@ -871,7 +819,7 @@ class LakeTable:
         rollback target are REMOVED from the idempotency ledger so the
         CDC pipeline can legitimately re-apply them."""
         meta = dict(self.meta)
-        target = self._snapshot(snapshot_id)  # KeyError if unknown
+        fs = self.files(snapshot_id)  # KeyError if unknown
         replayable = {
             s["batch_id"]
             for s in meta["snapshots"]
@@ -882,14 +830,12 @@ class LakeTable:
             "parent_id": meta["current_snapshot_id"],
             "operation": "rollback",
             "rolled_back_to": snapshot_id,
-            "schema_id": target.get("schema_id"),
+            "schema_id": fs.schema.schema_id,
             # a rollback across a rescale restores the target's layout:
             # the manifest's bucket keys and meta.n_buckets must agree
-            "n_buckets": target.get("n_buckets", meta["n_buckets"]),
+            "n_buckets": fs.n_buckets,
         }
-        meta["snapshots"] = meta["snapshots"] + [
-            {**summary, "files": {b: list(fs) for b, fs in target["files"].items()}}
-        ]
+        meta["snapshots"] = meta["snapshots"] + [{**summary, "files": fs.manifest()}]
         meta["n_buckets"] = summary["n_buckets"]
         meta["current_snapshot_id"] = summary["snapshot_id"]
         meta["committed_batches"] = [
@@ -924,15 +870,8 @@ class LakeTable:
         if not expired:
             return {"expired_snapshots": [], "files_deleted": 0}
 
-        def paths(snapshot: dict) -> set:
-            return {
-                p
-                for fs in snapshot["files"].values()
-                for p, _ in map(self._file_entry, fs)
-            }
-
-        live = set().union(*(paths(s) for s in retained)) if retained else set()
-        dead = sorted(set().union(*(paths(s) for s in expired)) - live)
+        live = set().union(*(self.files(s).paths() for s in retained))
+        dead = sorted(set().union(*(self.files(s).paths() for s in expired)) - live)
 
         meta["snapshots"] = retained
         self._write_meta(meta, version=self._meta_version + 1)
@@ -954,10 +893,7 @@ class LakeTable:
         store at 10^6+ files the same set-difference runs as a Spark
         anti-join of the listing against the manifest union."""
         referenced = {
-            os.path.realpath(p)
-            for s in self.meta["snapshots"]
-            for fs in s["files"].values()
-            for p, _ in map(self._file_entry, fs)
+            os.path.realpath(p) for s in self.meta["snapshots"] for p in self.files(s).paths()
         }
         deleted = 0
         for entry in sorted(os.listdir(self.data_dir)):
@@ -1057,13 +993,17 @@ class LakeTable:
                     f"snapshot {s['snapshot_id']} batch {s['batch_id']!r} "
                     "missing from the idempotency ledger (replay would re-apply)"
                 )
-            for fs in s["files"].values():
-                for path, _sid in map(self._file_entry, fs):
-                    files_checked += 1
-                    if not os.path.exists(path):
-                        errors.append(
-                            f"snapshot {s['snapshot_id']} references missing file {path}"
-                        )
+            try:
+                fs = self.files(s)
+            except ValueError as e:
+                errors.append(str(e))
+                continue
+            for _b, path, _sid in fs:
+                files_checked += 1
+                if not os.path.exists(path):
+                    errors.append(
+                        f"snapshot {s['snapshot_id']} references missing file {path}"
+                    )
         return {"ok": not errors, "errors": errors, "files_checked": files_checked}
 
     def drop(self) -> None:

@@ -50,7 +50,6 @@ def create_transcripts_table(
     n_buckets: int = 32,
     with_tool: bool = False,
     merge_mode: str = "cow",
-    delta_layout: str = "bucketed",
     meta_io=None,
 ) -> LakeTable:
     return LakeTable.create(
@@ -61,7 +60,6 @@ def create_transcripts_table(
         version_cols=VERSION_ORDER,
         n_buckets=n_buckets,
         merge_mode=merge_mode,
-        delta_layout=delta_layout,
         meta_io=meta_io,
     )
 

@@ -97,10 +97,30 @@ def test_spark_submit_py_files_round_trip(spark, tmp_path_factory):
     pd.testing.assert_frame_equal(got, want, check_dtype=False)
 
 
-def test_cli_curate_pipeline(spark, tmp_path_factory, capsys):
+def test_cli_curate_pipeline(spark, tmp_path_factory, capsys, monkeypatch):
     """curate: exact+near dedup, decontamination, annotation,
     PII redaction, language sampling and packing as ONE spark-submit
-    surface; every stage's row count is reported as lineage."""
+    surface; every stage's row count is reported as lineage. Each
+    counted stage is persisted, so the near-dedup clustering runs once
+    for all later counts and the write."""
+    from silk_spark.operators import dedup_suite as ds
+
+    cluster_rows = spark.sparkContext.accumulator(0)
+    near_dup_clusters = ds.near_dup_clusters
+
+    def counting_clusters(*a, **k):
+        """near_dup_clusters, counting each row it emits on every
+        execution of its plan."""
+
+        def tick(batches):
+            for pdf in batches:
+                cluster_rows.add(len(pdf))
+                yield pdf
+
+        out = near_dup_clusters(*a, **k)
+        return out.mapInPandas(tick, out.schema)
+
+    monkeypatch.setattr(ds, "near_dup_clusters", counting_clusters)
     root = str(tmp_path_factory.mktemp("curate"))
     docs_dir = os.path.join(root, "docs")
     bench_dir = os.path.join(root, "bench")
@@ -138,6 +158,8 @@ def test_cli_curate_pipeline(spark, tmp_path_factory, capsys):
     # the two surviving variants are near-dups -> one cluster, one drop
     assert counts["near_dedup"] == 33
     assert counts["decontaminate"] == 32  # doc 7 overlaps the benchmark
+    # one row per exact-dedup survivor: the clustering ran exactly once
+    assert cluster_rows.value == counts["exact_dedup"]
     out = spark.read.parquet(out_dir)
     assert rep["rows"] == 32
     assert {"lang", "quality", "n_tokens", "pack_id"} <= set(out.columns)

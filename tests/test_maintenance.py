@@ -178,9 +178,8 @@ class TestLookup:
         assert table.lookup("conv-no-such-key").count() == 0
 
     def test_lookup_prunes_to_one_bucket(self, table):
-        """After compaction (no unpartitioned '*' deltas) the lookup
-        plan's file scan covers exactly one bucket's files — strictly
-        fewer than the full table's."""
+        """After compaction the lookup plan's file scan covers exactly
+        one bucket's files — strictly fewer than the full table's."""
         table.compact()
         conv = table.read().toPandas()["conv_id"].iloc[0]
 
@@ -189,10 +188,9 @@ class TestLookup:
 
         lookup_files = {path(p) for p in table.lookup(conv).inputFiles()}
         full_files = {path(p) for p in table.read().inputFiles()}
-        files_by_bucket = {
-            b: {path(self_p) for self_p, _ in map(table._file_entry, fs)}
-            for b, fs in table._bucket_files().items()
-        }
+        files_by_bucket: dict[int, set] = {}
+        for b, p, _sid in table.files():
+            files_by_bucket.setdefault(b, set()).add(path(p))
         assert lookup_files < full_files
         assert any(lookup_files == fs for fs in files_by_bucket.values())
         assert table.lookup(conv).count() > 0

@@ -74,50 +74,33 @@ def test_mor_compaction_preserves_state(spark, log, tmp_path_factory):
     assert all(len(v) <= 2 for v in files.values())
 
 
-def test_unpartitioned_delta_layout(spark, log, tmp_path_factory):
-    """Zero-shuffle MOR layout: deltas append as scanned under manifest
-    key '*'; final state equals the bucketed layout; bucket-subset
-    scans still see global-delta rows; compact() re-clusters into
-    buckets and drops the '*' entry."""
-    root = str(tmp_path_factory.mktemp("mor_unpart"))
-    t = create_transcripts_table(
-        spark, os.path.join(root, "t"), n_buckets=8, merge_mode="mor",
-        delta_layout="unpartitioned",
-    )
-    cp = CheckpointStore(os.path.join(root, "cp"))
-    CdcPipeline(spark, t, cp, changelog=log).run(end_lsn=3000, batch_size=700)
-    assert "*" in t.meta["snapshots"][-1]["files"]
-    want = normalize(final_state_oracle(log.toPandas()))
-    got = normalize(t.read().toPandas())
-    pd.testing.assert_frame_equal(got, want)
-    # bucket-subset scan honors its contract: only the requested
-    # bucket's rows come back (global '*' deltas are read for
-    # completeness but out-of-scope keys — whose base files were
-    # pruned and would resolve stale — are filtered out), and the
-    # per-bucket scans partition the full resolve exactly
-    full_df = t.scan(resolve=True)
-    full = full_df.count()
+@pytest.mark.parametrize("case", ["mor", "cow", "pre_rescale"])
+def test_bucket_subset_scans_partition_the_resolve(spark, log, tmp_path_factory, case):
+    """The `scan(buckets=...)` contract: each bucket's pruned scan
+    returns only that bucket's rows, the per-bucket scans partition the
+    full resolve exactly, and one bucket's pruned scan equals the full
+    resolve restricted to that bucket. Checked on a MOR table, a COW
+    table, and a pre-rescale MOR snapshot read after the layout changed
+    (its bucket keys name buckets of its own 8-bucket function)."""
+    root = str(tmp_path_factory.mktemp(f"subset_{case}"))
+    t = _run(spark, log, root, "cow" if case == "cow" else "mor")
+    as_of = None
+    if case == "pre_rescale":
+        as_of = t.meta["current_snapshot_id"]
+        t.rescale_buckets(3)
+    full = t.scan(resolve=True, as_of_snapshot=as_of)
     per_bucket = 0
     for b in range(8):
-        sub = t.scan(buckets=[b], resolve=True)
+        sub = t.scan(buckets=[b], resolve=True, as_of_snapshot=as_of)
         assert sub.filter(f"_bucket != {b}").count() == 0
         per_bucket += sub.count()
-    assert per_bucket == full
-    # value-level: one bucket's pruned scan == full resolve restricted
-    # to that bucket (catches delta-only stale resolution)
-    sub0 = normalize(
-        t.scan(buckets=[0], resolve=True, with_tombstones=False).drop("_bucket").toPandas()
-    ) if t.scan(buckets=[0], resolve=True, with_tombstones=False).count() else None
-    want0 = normalize(
-        full_df.filter("_bucket = 0").filter("op is null or op != 'D'").drop("_bucket").toPandas()
-    ) if sub0 is not None else None
-    if sub0 is not None:
-        pd.testing.assert_frame_equal(sub0, want0)
-    # compaction folds into bucketed layout
-    t.compact()
-    files = t.refresh().meta["snapshots"][-1]["files"]
-    assert "*" not in files and len(files) > 0
-    pd.testing.assert_frame_equal(normalize(t.read().toPandas()), want)
+    assert per_bucket == full.count()
+    for b in (0, 5):
+        got = t.scan(buckets=[b], resolve=True, with_tombstones=False, as_of_snapshot=as_of)
+        want = full.filter(f"_bucket = {b}").filter("op IS NULL OR op != 'D'")
+        want = normalize(want.drop("_bucket").toPandas())
+        assert len(want) > 0
+        pd.testing.assert_frame_equal(normalize(got.drop("_bucket").toPandas()), want)
 
 
 def test_in_memory_metadata_backend(spark, log, tmp_path_factory):

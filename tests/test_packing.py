@@ -2,6 +2,7 @@
 and partitioning invariance (determinism is the contract — the
 text_pack oracle replays the same recurrence in DuckDB)."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from silk_spark.operators.packing import pack_sequences, pack_summary
@@ -24,6 +25,14 @@ class TestPackSequences:
         ]
         got = _assign(spark, rows, capacity=8)
         assert [got[i][0] for i in (1, 2, 3, 4, 5)] == [0, 0, 1, 2, 3]
+
+    def test_string_id_column_rejected_up_front(self, spark):
+        """The shard is pmod(id, n_chunks) and ids are packed as bigint:
+        a string id column raises a TypeError naming it, not an
+        executor-side error inside the packing UDF."""
+        df = spark.createDataFrame([("d1", "a b"), ("d2", "c")], "doc_id string, text string")
+        with pytest.raises(TypeError, match="'doc_id'"):
+            pack_sequences(df, capacity=8).collect()
 
     def test_overcapacity_doc_gets_solo_pack(self, spark):
         rows = [

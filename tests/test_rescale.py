@@ -126,20 +126,6 @@ class TestRescale:
             normalize(table.read().toPandas()), final_state_oracle(log.toPandas())
         )
 
-    def test_mor_unpartitioned_deltas_folded(self, spark, log, tmp_path):
-        table, pipe = _pipeline(
-            spark, log, tmp_path, "f",
-            n_buckets=8, merge_mode="mor", delta_layout="unpartitioned",
-        )
-        pipe.run(end_lsn=N_EVENTS, batch_size=1000)
-        assert "*" in table.current_snapshot()["files"]
-        table.rescale_buckets(16)
-        keys = set(table.current_snapshot()["files"])
-        assert "*" not in keys  # global deltas re-clustered into buckets
-        pd.testing.assert_frame_equal(
-            normalize(table.read().toPandas()), final_state_oracle(log.toPandas())
-        )
-
     def test_noop_and_validation(self, spark, log, tmp_path):
         table, pipe = _pipeline(spark, log, tmp_path, "g", n_buckets=8)
         pipe.run(end_lsn=1000, batch_size=1000)
@@ -148,39 +134,3 @@ class TestRescale:
         assert res.get("noop") and table.meta["current_snapshot_id"] == snap
         with pytest.raises(ValueError):
             table.rescale_buckets(0)
-
-    def test_legacy_snapshots_backfilled_before_rescale(self, spark, log, tmp_path):
-        """Tables written before per-snapshot layouts were recorded have
-        snapshot records with no 'n_buckets'; scan()'s fallback for
-        those is the CURRENT meta value. rescale_buckets must backfill
-        the pre-rescale layout onto them first, or time-traveling to a
-        legacy snapshot after the rescale would recompute _bucket with
-        the NEW count and misattribute rows."""
-        table, pipe = _pipeline(spark, log, tmp_path, "legacy", n_buckets=8)
-        pipe.run(end_lsn=2000, batch_size=1000)
-        # simulate the legacy on-disk format: strip recorded layouts
-        meta = dict(table.meta)
-        meta["snapshots"] = [
-            {k: v for k, v in s.items() if k != "n_buckets"}
-            for s in meta["snapshots"]
-        ]
-        table._write_meta(meta, version=table._meta_version + 1)
-        legacy_snap = table.meta["current_snapshot_id"]
-        want = normalize(table.read().toPandas())
-
-        table.rescale_buckets(32)
-        # every pre-rescale snapshot now records the layout it was
-        # actually written under
-        assert all(
-            s.get("n_buckets") == 8
-            for s in table.meta["snapshots"]
-            if s["snapshot_id"] <= legacy_snap
-        )
-        got = normalize(table.read(as_of_snapshot=legacy_snap).toPandas())
-        pd.testing.assert_frame_equal(got, want)
-        # and a bucket-pruned point lookup of the legacy snapshot still
-        # resolves through the OLD bucket function
-        key = want.iloc[0]
-        rows = table.lookup(key["conv_id"], as_of_snapshot=legacy_snap).collect()
-        assert len(rows) >= 1
-        assert all(r["conv_id"] == key["conv_id"] for r in rows)

@@ -33,8 +33,7 @@ class TestVerify:
         assert res["ok"], res["errors"]
 
     def test_detects_missing_file(self, spark, table):
-        snap = table.current_snapshot()
-        path, _ = table._file_entry(next(iter(snap["files"].values()))[0])
+        _b, path, _sid = next(iter(table.files()))
         os.remove(path)
         res = table.verify()
         assert not res["ok"]
