@@ -3,7 +3,8 @@
 One JSON manifest per committed micro-batch. The manifests are lineage
 only: the resume offset comes from the table's own ledger of committed
 batch ids (CdcPipeline.resume_lsn), never from this store. Manifests
-carry per-bucket applied counts + offsets -- the Spark analogue of Silk's
+carry applied counts per manifest key (a bucket, or a MOR delta's
+bucket range) + offsets -- the Spark analogue of Silk's
 ExecutionReport (/root/reference/silk-core/src/main/scala/org/
 silkframework/execution/ExecutionReport.scala).
 """

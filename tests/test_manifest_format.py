@@ -3,9 +3,11 @@ one format check. A manifest it cannot read makes every read raise
 ValueError instead of skipping files (a bucket-pruned read would
 silently drop their rows), and `verify()` reports it without raising.
 
-Three hand-edited metadata docs, each applied to every snapshot of a
-healthy MOR table: a non-integer bucket key (the removed unpartitioned
-"*" deltas), a bare-string entry, a snapshot without `n_buckets`."""
+Hand-edited metadata docs, each applied to every snapshot of a healthy
+4-bucket MOR table: a bucket key that is neither a bucket "<b>" nor an
+inclusive range "<lo>-<hi>" of the layout (the removed unpartitioned
+"*" deltas, lo > hi, hi past the last bucket, a non-numeric bound), a
+bare-string entry, a snapshot without `n_buckets`."""
 
 import json
 import re
@@ -19,10 +21,13 @@ from silk_spark.sources.lake import LakeTable
 from silk_spark.streaming.pipeline import CdcPipeline, create_transcripts_table
 
 
-def _star_bucket_key(snap: dict) -> dict:
-    files = dict(snap["files"])
-    files["*"] = files.pop(next(iter(files)))
-    return {**snap, "files": files}
+def _bucket_key(key: str):
+    def edit(snap: dict) -> dict:
+        files = dict(snap["files"])
+        files[key] = files.pop(next(iter(files)))
+        return {**snap, "files": files}
+
+    return edit
 
 
 def _bare_string_entry(snap: dict) -> dict:
@@ -37,7 +42,10 @@ def _no_n_buckets(snap: dict) -> dict:
 
 
 CORRUPTIONS = {
-    "star_bucket_key": (_star_bucket_key, "manifest key '\\*' is not a bucket"),
+    "star_bucket_key": (_bucket_key("*"), "manifest key '\\*' is not a bucket"),
+    "range_lo_above_hi": (_bucket_key("3-1"), "manifest key '3-1' is not a bucket"),
+    "range_past_last_bucket": (_bucket_key("2-4"), "manifest key '2-4' is not a bucket"),
+    "range_non_numeric_bound": (_bucket_key("0-x"), "manifest key '0-x' is not a bucket"),
     "bare_string_entry": (_bare_string_entry, "is not \\[path, schema_id\\]"),
     "no_n_buckets": (_no_n_buckets, "records no bucket count"),
 }

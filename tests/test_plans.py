@@ -332,7 +332,9 @@ def test_batch_frame_bounds_are_a_broadcast_local_relation(spark, tmp_path_facto
 def test_manifest_scan_launches_no_listing_job(spark, tmp_path_factory):
     """Building a scan over more than 32 manifest files (Spark's
     default parallel-listing threshold) launches no Spark job: the
-    paths come from the manifest, so they are stat'ed on the driver."""
+    paths come from the manifest, so they are stat'ed on the driver.
+    The files are the 64 one-bucket files a compaction writes (a delta
+    commit writes one file per writer task)."""
     from silk_spark.datagen import changelog
     from silk_spark.streaming.pipeline import create_transcripts_table, project_changes
 
@@ -340,6 +342,7 @@ def test_manifest_scan_launches_no_listing_job(spark, tmp_path_factory):
         spark, str(tmp_path_factory.mktemp("listing")), n_buckets=64, merge_mode="mor"
     )
     t.merge_batch(project_changes(changelog(spark, 2000, n_convs=200, seed=8)), "b-0")
+    t.compact()
     assert sum(len(fs) for fs in t.current_snapshot()["files"].values()) > 32
     sc = spark.sparkContext
     group = "manifest-scan"
