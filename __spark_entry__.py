@@ -1,7 +1,7 @@
 """Driver contract for silk-spark (PySpark-native CDC / analytics engine).
 
 ``entry``   — flagship: full CDC micro-batch replay (changelog ->
-              max-by dedup -> idempotent COW MERGE) on a synthesized
+              idempotent MOR MERGE -> max-by resolve) on a synthesized
               deterministic change log; returns the final table state.
 ``queries`` — one entry per implemented operator family (SURVEY.md §2):
               CDC semantics over the ``events`` stream table, Silk-style
@@ -39,7 +39,7 @@ def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def entry(spark: SparkSession) -> DataFrame:
     """Synthesize a deterministic 4k-event change log, replay it in 4
-    micro-batches through the copy-on-write MERGE pipeline (idempotent
+    micro-batches through the merge-on-read MERGE pipeline (idempotent
     batch commits + checkpoint lineage), return the final table state."""
     from silk_spark.checkpoint import CheckpointStore
     from silk_spark.datagen import changelog
@@ -774,14 +774,10 @@ def q_cdc_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         _ev_op().alias("op"),
     )
     root = tempfile.mkdtemp(prefix="silk_spark_evo_")
-    # MOR: the evolution being exercised is the registry + column-ID
-    # mapped scan, which MOR stresses HARDER than COW (pre-cut delta
-    # files lacking `tool` stay in the manifest forever and must be
-    # read with their written schema) — and each batch commit is an
-    # O(batch) append instead of a bucket rewrite
-    table = create_transcripts_table(
-        spark, os.path.join(root, "t"), n_buckets=8, merge_mode="mor"
-    )
+    # the evolution being exercised is the registry + column-ID
+    # mapped scan: pre-cut delta files lacking `tool` stay in the
+    # manifest and must be read with their written schema
+    table = create_transcripts_table(spark, os.path.join(root, "t"), n_buckets=8)
     ckpt = CheckpointStore(os.path.join(root, "cp"))
     v1 = log.filter(F.col("lsn") < cut).drop("tool")
     v2 = log.filter(F.col("lsn") >= cut)

@@ -91,7 +91,6 @@ Env:
   SILK_BENCH_EVENTS    headline-tier change-log size (default 36_000_000)
   SILK_BENCH_EFF_EVENTS  efficiency-tier prefix size (default 24M)
   SILK_BENCH_GUARANTEE_EVENTS  guarantee-tier log size (default 6M)
-  SILK_BENCH_MODE      merge mode for the throughput stage (default mor)
   SILK_BENCH_REPEATS   interleaved repetitions per level (default 2)
   SILK_BENCH_SCALING   "0" to skip the small-parallelism level
   SILK_BENCH_DEADLINE  wall-clock budget in seconds (default 1500)
@@ -371,10 +370,7 @@ def merge_bench(
         shuffle_partitions=64,
         extra_conf={"spark.local.dir": os.path.join(root, "scratch")},
     )
-    table = create_transcripts_table(
-        spark, os.path.join(root, "t"), n_buckets=64,
-        merge_mode=os.environ.get("SILK_BENCH_MODE", "mor"),
-    )
+    table = create_transcripts_table(spark, os.path.join(root, "t"), n_buckets=64)
     ckpt = CheckpointStore(os.path.join(root, "cp"))
     pre_merge = None
     if reconcile:

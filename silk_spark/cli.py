@@ -7,13 +7,14 @@ North-rule surface: `spark-submit --py-files silk_spark.zip -m` or
         --checkpoints /lake/_ckpt --end-lsn 10000000 --batch-size 1000000
 
 Subcommands:
-  init      create the transcripts LakeTable
+  init      create the transcripts LakeTable (merge-on-read: each
+            batch appends delta files that `compact` folds)
   ingest    offset-driven micro-batch loop (resumes from the table's ledger)
   stream    Structured Streaming tail (availableNow drain)
-  compact   fold MOR delta files
+  compact   fold the delta files into one file per bucket
   show      print table state summary + lineage (--as-of time-travels)
   history   commit history (snapshot summaries)
-  changes   incremental changelog read between snapshots (MOR appends)
+  changes   incremental changelog read between snapshots (merge appends)
   diff      row-level I/U/D diff between two snapshots
   rollback  point the table back at an earlier snapshot
   expire    expire old snapshots + delete their exclusive data files
@@ -39,7 +40,6 @@ def build_parser() -> argparse.ArgumentParser:
     init = sub.add_parser("init", help="create the transcripts table")
     init.add_argument("--table", required=True)
     init.add_argument("--buckets", type=int, default=64)
-    init.add_argument("--merge-mode", choices=["cow", "mor"], default="mor")
 
     ing = sub.add_parser("ingest", help="offset-driven micro-batch ingest")
     ing.add_argument("--changelog", required=True, help="parquet dir of the change log")
@@ -148,10 +148,8 @@ def main(argv: list[str] | None = None) -> int:
     spark = get_spark("silk-spark-cli", cpus=args.cpus)
 
     if args.cmd == "init":
-        create_transcripts_table(
-            spark, args.table, n_buckets=args.buckets, merge_mode=args.merge_mode
-        )
-        print(json.dumps({"created": args.table, "merge_mode": args.merge_mode}))
+        create_transcripts_table(spark, args.table, n_buckets=args.buckets)
+        print(json.dumps({"created": args.table}))
         return 0
 
     if args.cmd == "ingest":
@@ -331,7 +329,6 @@ def main(argv: list[str] | None = None) -> int:
             "rows": table.read(as_of_snapshot=args.as_of).count(),
             "snapshot_id": snap["snapshot_id"] if snap else None,
             "schema_id": table.schema.schema_id,
-            "merge_mode": table.meta.get("merge_mode"),
             "committed_batches": len(table.meta["committed_batches"]),
             "resume_lsn": ledger_resume_lsn(table),
         }

@@ -110,19 +110,9 @@ def _persist(df: DataFrame) -> DataFrame:
     25-query bench, a notebook) would otherwise accumulate
     MEMORY_AND_DISK blocks that disk spill does not LRU-evict.
     Callers release them all via release_persisted() once the
-    operator's output is materialized.
-
-    Policy knob: spark.silk.shingles.persist = true (default) caches;
-    false passes through lazily, recomputing the tokenization per
-    referencing subplan — on a memory-bandwidth-bound host storing
-    |docs| shingle arrays can cost more than the recompute it saves
-    (see BASELINE.md A/B)."""
-    try:
-        mode = df.sparkSession.conf.get("spark.silk.shingles.persist", "true")
-    except Exception:
-        mode = "true"
-    if str(mode).lower() == "false":
-        return df
+    operator's output is materialized. Caching beat recomputing the
+    tokenization per referencing subplan in an interleaved A/B (all 6
+    runs, BASELINE.md "Round-5 A/B: shingle-frame persist")."""
     df = df.persist()
     with _PERSISTED_LOCK:
         _PERSISTED.setdefault(_session_key(df), []).append(df)

@@ -1,5 +1,4 @@
-"""LakeTable: a hash-bucketed snapshot table on parquet, merged
-copy-on-write or merge-on-read.
+"""LakeTable: a hash-bucketed, merge-on-read snapshot table on parquet.
 
 Implements the Iceberg semantics the north rule needs -- atomic
 snapshot commits, batch-id idempotency in the snapshot summary,
@@ -18,22 +17,23 @@ Layout::
 
     <root>/metadata/version-hint.text     # current metadata version (atomic pointer)
     <root>/metadata/v<k>.metadata.json    # schemas + snapshot log + file manifest
-    <root>/data/snap-<sid>-<uid>/_bucket=<b>/*.parquet   # one bucket per file
-    <root>/data/snap-<sid>-<uid>/*.parquet              # MOR delta: a bucket range
+    <root>/data/snap-<sid>-<uid>/_bucket=<b>/*.parquet   # rewrite: one bucket per file
+    <root>/data/snap-<sid>-<uid>/*.parquet              # MERGE delta: a bucket range
 
 Each snapshot's manifest is `files = {"<b>" | "<lo>-<hi>": [[path,
 schema_id], ...]}` plus the `n_buckets` and `schema_id` it was written
 under; a key names the buckets its files hold, "<lo>-<hi>" an
-inclusive range. `LakeTable.files` is its one reader. A copy-on-write
-MERGE rewrites ONLY the buckets containing changed keys, one file per
-bucket, and carries the others forward by reference; a merge-on-read
-MERGE appends the batch as one delta file per writer task, each
-holding a contiguous bucket range (with a stored `_bucket` column),
-that scans resolve until `compact()` folds them into one file per
-bucket. At 100 TB with (say) 4096 buckets, a micro-batch touching 200
-conversations rewrites ~200/4096 of the table, not all of it. Deletes
-are kept as tombstone rows (op='D') so the final state is invariant to
-how the change log is sliced into batches; `compact()` drops them.
+inclusive range. `LakeTable.files` is its one reader. A MERGE
+appends the batch as one delta file per writer task, each holding a
+contiguous bucket range (with a stored `_bucket` column), and carries
+every earlier file forward by reference; scans resolve the versions
+per key until `compact()` -- the one copy-on-write rewrite -- folds
+them into one file per bucket. A MERGE writes O(batch) whatever the
+table size, and every commit, merge or rewrite, is an immutable
+snapshot CAS-committed under its batch id. Deletes are kept as
+tombstone rows (op='D') so the final state is invariant to how the
+change log is sliced into batches; `compact(drop_tombstones=True)`
+drops them.
 
 Reference analogue: Silk's EntitySink openTable/writeEntity/closeTable
 (silk-core/src/main/scala/org/silkframework/dataset/EntitySink.scala:12-50)
@@ -132,30 +132,32 @@ def write_buckets(
     df: DataFrame,
     path: str,
     n_buckets: int,
-    sort_cols: tuple[str, ...] = (),
+    key_cols: list[str],
     ranges: bool = False,
 ) -> None:
     """Write `df` (with its `_bucket` column) under `path` from k =
-    min(n_buckets, cores) writer tasks. Bucket b goes to task
-    b * k // n_buckets, so each task gets a contiguous bucket range and
-    an equal share of the buckets: the exchange key is the task's label
-    (`task_labels`), a driver-computed constant, so there is no sampling
-    job as `repartitionByRange` would run. The count is explicit because
-    AQE does not coalesce it: left to AQE, a small batch's shuffle fell
+    min(n_buckets, cores) writer tasks, each sorted by (_bucket,
+    *key_cols). Bucket b goes to task b * k // n_buckets, so each task
+    gets a contiguous bucket range and an equal share of the buckets:
+    the exchange key is the task's label (`task_labels`), a
+    driver-computed constant, so there is no sampling job as
+    `repartitionByRange` would run. The count is explicit because AQE
+    does not coalesce it: left to AQE, a small batch's shuffle fell
     below its 1 MB partition minimum and one task did all the writing.
+    The sort clusters each file by key, so parquet min/max column stats
+    let point lookups and key-range scans skip row groups (Iceberg
+    sort-order analogue).
 
-    With `ranges` (MOR deltas) each task writes ONE file holding its
+    With `ranges` (MERGE deltas) each task writes ONE file holding its
     bucket range, `_bucket` kept as a stored column whose footer min/max
-    `written_buckets` reads back. Otherwise (COW merges and rewrites)
-    the files go under `_bucket=<b>/`, one per bucket. A parquet file
-    costs about 15-20 ms whatever its size, so a delta write is bound by
-    its file count: a warm 30k-event delta on 64 buckets and 4 cores
-    went from 64 files in 1.29 s to 4 files in 0.72 s (`merge_batch`,
-    median of 7)."""
+    `written_buckets` reads back. Otherwise (rewrites) the files go
+    under `_bucket=<b>/`, one per bucket. A parquet file costs about
+    15-20 ms whatever its size, so a delta write is bound by its file
+    count: a warm 30k-event delta on 64 buckets and 4 cores went from
+    64 files in 1.29 s to 4 files in 0.72 s (`merge_batch`, median of
+    7)."""
     k = min(n_buckets, df.sparkSession.sparkContext.defaultParallelism)
-    out = to_writer_tasks(df, n_buckets, k)
-    if sort_cols:
-        out = out.sortWithinPartitions(*sort_cols)
+    out = to_writer_tasks(df, n_buckets, k).sortWithinPartitions("_bucket", *key_cols)
     writer = out.write.mode("overwrite")
     (writer if ranges else writer.partitionBy("_bucket")).parquet(path)
 
@@ -248,8 +250,10 @@ class FileSet:
 
 
 class LakeTable:
-    """Copy-on-write or merge-on-read table with snapshot isolation
-    and optimistic multi-writer concurrency.
+    """Merge-on-read table with snapshot isolation and optimistic
+    multi-writer concurrency. Tables that earlier versions created
+    copy-on-write open unchanged: their "merge" snapshots hold resolved
+    one-bucket files, as after `compact()`.
 
     Metadata commits go through a `MetadataIO` backend (sources/io.py):
     local atomic-rename/CAS by default, in-memory fake for tests,
@@ -280,10 +284,8 @@ class LakeTable:
         key_cols: list[str] | None = None,
         version_cols: list[str] | None = None,
         n_buckets: int = 32,
-        merge_mode: str = "cow",
         meta_io=None,
     ) -> "LakeTable":
-        assert merge_mode in ("cow", "mor")
         t = LakeTable(spark, root, meta_io=meta_io)
         os.makedirs(t.meta_dir, exist_ok=True)
         os.makedirs(t.data_dir, exist_ok=True)
@@ -293,7 +295,6 @@ class LakeTable:
             "key_cols": key_cols or KEYS,
             "version_cols": version_cols or VERSION_ORDER,
             "n_buckets": n_buckets,
-            "merge_mode": merge_mode,
             "registry": registry.to_dict(),
             "current_snapshot_id": None,
             "snapshots": [],
@@ -500,7 +501,7 @@ class LakeTable:
         self,
         buckets: list[int] | None = None,
         with_tombstones: bool = True,
-        resolve: bool | None = None,
+        resolve: bool = True,
         as_of_snapshot: int | None = None,
     ) -> DataFrame:
         """Read the table (optionally pruned to a bucket subset). Old
@@ -508,9 +509,8 @@ class LakeTable:
         -> NULL, widened types -> cast): the column-ID mapped read.
 
         `resolve` applies the max-by-version reduction per key — the
-        merge-on-read step. Defaults to True for a MOR table (delta
-        files carry multiple versions per key), False for COW (files
-        are already resolved at write time).
+        merge-on-read step, needed while delta files hold several
+        versions of a key. `resolve=False` reads every stored row.
 
         `as_of_snapshot` time-travels: read the file manifest (and the
         schema) AS OF that committed snapshot — snapshots are immutable
@@ -518,8 +518,6 @@ class LakeTable:
         no data copies (Iceberg `VERSION AS OF` semantics). A string
         `as_of_snapshot` resolves through the tag map."""
         meta = self.meta
-        if resolve is None:
-            resolve = meta["merge_mode"] == "mor"
         fs = self.files(as_of_snapshot, buckets)
         if not fs.entries:
             return empty_frame(self.spark, fs.schema.fields() + [("_bucket", "int")])
@@ -576,15 +574,16 @@ class LakeTable:
         self, from_snapshot: int, to_snapshot: int | None = None
     ) -> DataFrame:
         """Incremental changelog read: the change rows APPENDED by the
-        MOR commits in (from_snapshot, to_snapshot] — exactly the files
-        those snapshots added, a pure manifest diff with no join and no
-        scan of pre-existing data (Iceberg incremental append scan).
-        Rows carry the original op/lineage columns, so a downstream
-        consumer can chain CDC pipelines table-to-table.
+        MERGE commits in (from_snapshot, to_snapshot] — exactly the
+        files those snapshots added, a pure manifest diff with no join
+        and no scan of pre-existing data (Iceberg incremental append
+        scan). Rows carry the original op/lineage columns, so a
+        downstream consumer can chain CDC pipelines table-to-table.
 
-        Only delta-append commits qualify: a COW merge / overwrite /
-        compact rewrites files, where added-files != changed-rows —
-        use `snapshot_diff` across those. Tag names resolve."""
+        Only delta-append ("merge-mor") commits qualify: an overwrite,
+        compact, rescale, or a "merge" that an earlier copy-on-write
+        table wrote, rewrites files, where added-files != changed-rows
+        — use `snapshot_diff` across those. Tag names resolve."""
         from_snapshot = self.resolve_ref(from_snapshot)
         to_snapshot = self.resolve_ref(to_snapshot)
         to_snapshot = (
@@ -612,7 +611,7 @@ class LakeTable:
         self, from_snapshot: int, to_snapshot: int | None = None
     ) -> DataFrame:
         """Engine-level CDC between two committed snapshots, valid
-        across ANY operations (COW rewrites, compactions, schema
+        across ANY operations (rewrites, compactions, schema
         evolution): full-outer join of the two resolved live states on
         the key columns, emitting one row per changed key with
         `_change_type` I/U/D and `before`/`after` structs. Shuffles
@@ -675,39 +674,32 @@ class LakeTable:
         extra_summary: dict | None = None,
         commit_retries: int = 0,
     ) -> dict:
-        """Idempotent MERGE of one micro-batch.
+        """Idempotent MERGE of one micro-batch (Iceberg v2
+        merge-on-read).
 
         `changes` must carry key_cols + version_cols + 'op' (+payload).
-        Steps: (1) skip if batch_id already committed; (2) dedup to the
-        latest event per key (max-by version); (3) apply per the table's
-        merge_mode; (4) atomically commit a new snapshot whose summary
-        embeds batch_id + lineage. Returns the snapshot summary (or the
-        prior one if skipped).
+        Steps: (1) skip if batch_id already committed; (2) evolve the
+        schema to the batch's columns; (3) append the batch as delta
+        files, one per writer task, each holding a contiguous bucket
+        range sorted by (_bucket, key); (4) atomically commit a new
+        snapshot whose summary embeds batch_id + lineage. Returns the
+        snapshot summary (or {"skipped": True, ...} if already
+        committed).
 
-        merge_mode (Iceberg v2 semantics):
-          * "cow" — copy-on-write: rewrite only touched buckets,
-            resolving base-vs-change by max version. Write cost is
-            O(touched table data); reads are plain scans.
-          * "mor" — merge-on-read: append the batch as delta files, one
-            per writer task, each holding a contiguous bucket range
-            sorted by (_bucket, key) — write cost O(batch), no base read,
-            min(n_buckets, cores) files whatever the batch size; scans
-            resolve versions on the fly until `compact()` folds deltas.
-            At 10^10 events/day this is the only write path that keeps
-            MERGE throughput independent of table size.
-
-        Either mode converges to the same state under replay and
-        out-of-order batches (the max-by-(ts,lsn) rule is associative
-        and commutative over any batch slicing).
+        The write costs O(batch), with no base read and
+        min(n_buckets, cores) files whatever the batch size; scans
+        resolve versions per key until `compact()` folds the deltas. At
+        10^10 events/day this keeps MERGE throughput independent of
+        table size. The state converges under replay and out-of-order
+        batches: the max-by-(ts,lsn) rule is associative and commutative
+        over any batch slicing.
         """
         meta = dict(self.meta)
         if batch_id in meta["committed_batches"]:
             return {"skipped": True, "batch_id": batch_id}
 
         keys = meta["key_cols"]
-        order = meta["version_cols"]
         n_buckets = meta["n_buckets"]
-        mode = meta["merge_mode"]
         files = manifest(self.files())
 
         # schema evolution: add new incoming columns / widen types
@@ -716,18 +708,15 @@ class LakeTable:
         registry.evolve(incoming)
         schema = registry.current
 
-        changes = align_to_schema(changes, schema)
-        if mode != "mor":
-            # COW resolves base-vs-change at write time; shrinking the
-            # change side first keeps the union small.
-            changes = latest_by_key(changes, keys, order)
-        # MOR: NO in-batch dedup — scan-time max-by resolution already
+        # NO in-batch dedup — scan-time max-by resolution already
         # handles any number of versions per key, so the groupBy would
         # be a pure extra shuffle of the whole batch (measured ~35% of
         # batch wall-clock). The write path is ONE shuffle: bucket
         # layout. Intra-batch duplicate keys cost only bytes in the
         # delta files until compact() folds them.
-        changes = changes.withColumn("_bucket", bucket_expr(keys[0], n_buckets))
+        aligned = align_to_schema(changes, schema).withColumn(
+            "_bucket", bucket_expr(keys[0], n_buckets)
+        )
 
         snap_id = (meta["current_snapshot_id"] or 0) + 1
         # writer-unique dir: two racing committers computing the same
@@ -736,60 +725,33 @@ class LakeTable:
         # never referenced — Iceberg's failed-commit semantics)
         snap_dir = os.path.join(self.data_dir, f"snap-{snap_id}-{uuid.uuid4().hex[:8]}")
 
-        if mode == "mor":
-            # ONE Spark job per micro-batch: lineage rides the write via
-            # an Observation on the change stream (no separate stats
-            # job, no cache); per-file counts and bucket ranges come
-            # from the freshly written parquet footers (local metadata
-            # reads). At high batch rates the per-batch fixed cost IS
-            # the throughput ceiling, so job count matters more than
-            # anything else.
-            obs = Observation()
-            out = changes.observe(
-                obs,
-                F.count(F.lit(1)).alias("rows"),
-                F.sum(F.when(F.col("op") == "D", 1).otherwise(0)).alias("deletes"),
-            )
-            write_buckets(out, snap_dir, n_buckets, ("_bucket", *keys), ranges=True)
-            rows_in_batch = int(obs.get["rows"] or 0)
-            rows_deleted = int(obs.get["deletes"] or 0)
-            written, partition_stats = written_buckets(snap_dir)
-        else:
-            # COW needs the touched-bucket set BEFORE it can scan the
-            # base side, so it is inherently two jobs; cache the deduped
-            # batch so the aggregate isn't computed twice
-            changes = changes.cache()
-            stats_rows = (
-                changes.groupBy("_bucket")
-                .agg(
-                    F.count("*").alias("rows"),
-                    F.sum(F.when(F.col("op") == "D", 1).otherwise(0)).alias("deletes"),
-                )
-                .collect()
-            )
-            partition_stats = {str(r["_bucket"]): int(r["rows"]) for r in stats_rows}
-            rows_in_batch = sum(partition_stats.values())
-            rows_deleted = int(sum(r["deletes"] for r in stats_rows))
-            if stats_rows:
-                base = self.scan(buckets=[r["_bucket"] for r in stats_rows])
-                out = latest_by_key(
-                    base.unionByName(changes, allowMissingColumns=True), keys, order
-                )
-                write_buckets(out, snap_dir, n_buckets)
-            changes.unpersist()
-            written, _ = written_buckets(snap_dir)
+        # ONE Spark job per micro-batch: lineage rides the write via an
+        # Observation on the change stream (no separate stats job, no
+        # cache); per-file counts and bucket ranges come from the
+        # freshly written parquet footers (local metadata reads). At
+        # high batch rates the per-batch fixed cost IS the throughput
+        # ceiling, so job count matters more than anything else.
+        obs = Observation()
+        out = aligned.observe(
+            obs,
+            F.count(F.lit(1)).alias("rows"),
+            F.sum(F.when(F.col("op") == "D", 1).otherwise(0)).alias("deletes"),
+        )
+        write_buckets(out, snap_dir, n_buckets, keys, ranges=True)
+        rows_in_batch = int(obs.get["rows"] or 0)
+        rows_deleted = int(obs.get["deletes"] or 0)
+        written, partition_stats = written_buckets(snap_dir)
 
-        # new file manifest: COW replaces touched buckets' files, MOR
-        # appends delta files under their bucket ranges
+        # new file manifest: the delta files append under their bucket ranges
         added = manifest((b, p, schema.schema_id) for b, p in written)
         for key, entries in added.items():
-            files[key] = (files.get(key, []) if mode == "mor" else []) + entries
+            files[key] = files.get(key, []) + entries
 
         summary = {
             "snapshot_id": snap_id,
             "parent_id": meta["current_snapshot_id"],
             "batch_id": batch_id,
-            "operation": "merge" if mode == "cow" else "merge-mor",
+            "operation": "merge-mor",
             "schema_id": schema.schema_id,
             "rows_in_batch": rows_in_batch,
             "rows_deleted": rows_deleted,
@@ -814,7 +776,9 @@ class LakeTable:
             # another writer won this version: refresh to its state and
             # re-apply the whole batch on top (our files are orphans).
             # The committed_batches check at the top makes the retry a
-            # no-op if the conflicting commit WAS this batch_id.
+            # no-op if the conflicting commit WAS this batch_id. The
+            # retry takes the caller's frame: the aligned one carries
+            # `_bucket`, which the schema must never evolve into.
             self.refresh()
             return self.merge_batch(
                 changes, batch_id, extra_summary, commit_retries=commit_retries - 1
@@ -875,16 +839,7 @@ class LakeTable:
         out = align_to_schema(df, schema).withColumn(
             "_bucket", bucket_expr(meta["key_cols"][0], n_buckets)
         )
-        # cluster each bucket's file by key: parquet min/max column
-        # stats then let point lookups and key-range scans skip row
-        # groups inside a bucket (Iceberg sort-order analogue). Only
-        # maintenance rewrites pay the sort.
-        write_buckets(
-            out,
-            snap_dir,
-            n_buckets,
-            ("_bucket", *(c for c in meta["key_cols"] if c in out.columns)),
-        )
+        write_buckets(out, snap_dir, n_buckets, meta["key_cols"])
         written, _ = written_buckets(snap_dir)
         files = manifest((b, p, schema.schema_id) for b, p in written)
         summary = {
@@ -904,14 +859,15 @@ class LakeTable:
         return summary
 
     def compact(self, drop_tombstones: bool = False) -> dict:
-        """Fold every bucket's files into one resolved file set (the
-        MOR maintenance job; harmless no-op semantics on COW).
+        """Fold the delta files into one resolved file per bucket: the
+        table's one copy-on-write rewrite, committed as a snapshot like
+        any other.
 
         Tombstones are KEPT by default: a future batch may still carry
         an older-version event for a deleted key, and the tombstone's
         version is what out-merges it. Drop them only when the log is
         fully consumed (terminal compaction)."""
-        resolved = self.scan(with_tombstones=not drop_tombstones, resolve=True)
+        resolved = self.scan(with_tombstones=not drop_tombstones)
         return self.overwrite(resolved.drop("_bucket"), batch_id=f"compact-{uuid.uuid4().hex[:8]}")
 
     # ---------- maintenance ----------
@@ -953,7 +909,7 @@ class LakeTable:
         """Expire all but the newest `keep_last` snapshots (the current
         snapshot is always retained) and delete the data files that
         only expired snapshots reference — Iceberg `expire_snapshots`.
-        Bounds metadata size and reclaims the COW/compact rewrite
+        Bounds metadata size and reclaims the compact/rewrite
         history; time travel to an expired id raises thereafter.
 
         The expiry is committed (CAS, like any snapshot commit) BEFORE

@@ -49,9 +49,14 @@ def create_transcripts_table(
     root: str,
     n_buckets: int = 32,
     with_tool: bool = False,
-    merge_mode: str = "cow",
+    merge_mode: str = "mor",
     meta_io=None,
 ) -> LakeTable:
+    """A transcripts table. Every `LakeTable` is merge-on-read;
+    `merge_mode` stays for callers that still name it, and anything
+    but "mor" raises ValueError."""
+    if merge_mode != "mor":
+        raise ValueError(f"merge_mode {merge_mode!r}: every table is merge-on-read ('mor')")
     return LakeTable.create(
         spark,
         root,
@@ -59,7 +64,6 @@ def create_transcripts_table(
         key_cols=KEYS,
         version_cols=VERSION_ORDER,
         n_buckets=n_buckets,
-        merge_mode=merge_mode,
         meta_io=meta_io,
     )
 
@@ -275,7 +279,6 @@ class CdcPipeline:
         end_lsn: int,
         batch_size: int,
         start_lsn: int | None = None,
-        max_batches: int | None = None,
         stop_after: int | None = None,
         compact_every: int | None = None,
     ) -> list[dict]:
@@ -308,7 +311,5 @@ class CdcPipeline:
                     self.table.compact()
             lo = hi
             if stop_after is not None and batch_no >= stop_after:
-                break
-            if max_batches is not None and batch_no >= max_batches:
                 break
         return results

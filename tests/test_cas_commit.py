@@ -49,7 +49,7 @@ def test_try_create_is_create_if_absent(tmp_path, backend):
 
 
 def _two_handles(spark, root, meta_io=None):
-    t1 = create_transcripts_table(spark, root, n_buckets=4, merge_mode="mor", meta_io=meta_io)
+    t1 = create_transcripts_table(spark, root, n_buckets=4, meta_io=meta_io)
     t2 = LakeTable(spark, root, meta_io=meta_io if meta_io is not None else None)
     t2.refresh()  # both handles now hold version 0
     return t1, t2
@@ -84,6 +84,10 @@ def test_commit_retries_auto_resolve(spark, log, tmp_path_factory):
     want = normalize(final_state_oracle(_slice(log, 0, 800).toPandas()))
     got = normalize(t1.refresh().read().toPandas())
     pd.testing.assert_frame_equal(got, want)
+    # the retry re-applied the caller's frame: the `_bucket` layout
+    # column leaks into neither the schema nor the changelog read
+    assert "_bucket" not in t1.schema.names()
+    assert sorted(t1.read_changes(1).columns) == sorted(log.columns)
 
 
 def test_retry_skips_already_committed_batch_id(spark, log, tmp_path_factory):
@@ -101,7 +105,7 @@ def test_stale_hint_forward_probe(spark, log, tmp_path_factory):
     """A committer that crashed between the CAS and the hint write must
     not hide its (committed) version: readers probe forward."""
     root = os.path.join(str(tmp_path_factory.mktemp("cas_hint")), "t")
-    t = create_transcripts_table(spark, root, n_buckets=4, merge_mode="mor")
+    t = create_transcripts_table(spark, root, n_buckets=4)
     t.merge_batch(_slice(log, 0, 400), batch_id="b0")
     t.merge_batch(_slice(log, 400, 800), batch_id="b1")
     # simulate the crash window: hint rolled back to v0
@@ -161,7 +165,7 @@ def test_two_process_cas_race(spark, tmp_path_factory):
     log = changelog(spark, 1600, n_convs=40, turns_per_conv=6, seed=13)
     log_path = os.path.join(base, "log")
     log.write.parquet(log_path)
-    create_transcripts_table(spark, root, n_buckets=4, merge_mode="mor")
+    create_transcripts_table(spark, root, n_buckets=4)
 
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     code = _WRITER_CODE.format(repo=repo)
@@ -245,7 +249,7 @@ def _parquet_files(root):
     }
 
 
-@pytest.mark.parametrize("mode", ["cow", "mor"])
+@pytest.mark.parametrize("mode", ["mor"])
 def test_crash_between_data_write_and_cas(spark, log, tmp_path_factory, mode):
     """The torn commit leaves the table, its ledger and verify()
     untouched; a resumed pipeline applies the batch exactly once; and
@@ -255,7 +259,7 @@ def test_crash_between_data_write_and_cas(spark, log, tmp_path_factory, mode):
     base = str(tmp_path_factory.mktemp(f"torn_{mode}"))
     root = os.path.join(base, "t")
     io = CrashBeforeCasIO(os.path.join(root, "metadata"))
-    t = create_transcripts_table(spark, root, n_buckets=8, merge_mode=mode, meta_io=io)
+    t = create_transcripts_table(spark, root, n_buckets=8, meta_io=io)
     CdcPipeline(spark, t, None, changelog=log).run(end_lsn=1200, batch_size=400, stop_after=1)
     before_meta = LakeTable(spark, root).meta
     before_files = _parquet_files(root)

@@ -14,7 +14,7 @@ def test_cli_round_trip(spark, tmp_path_factory, capsys):
     table = os.path.join(root, "t")
     ckpt = os.path.join(root, "cp")
 
-    assert main(["--cpus", "8", "init", "--table", table, "--merge-mode", "mor"]) == 0
+    assert main(["--cpus", "8", "init", "--table", table]) == 0
     assert main([
         "--cpus", "8", "ingest", "--changelog", log_dir, "--table", table,
         "--checkpoints", ckpt, "--end-lsn", "1000", "--batch-size", "300",
@@ -27,7 +27,7 @@ def test_cli_round_trip(spark, tmp_path_factory, capsys):
     assert main(["--cpus", "8", "show", "--table", table]) == 0
     out = capsys.readouterr().out.strip().splitlines()
     created, first, resumed, shown = (json.loads(x) for x in out[-4:])
-    assert created["merge_mode"] == "mor"
+    assert created == {"created": table}
     assert first["rows_applied"] > 0
     assert resumed["rows_applied"] == 0
     assert shown["rows"] > 0 and shown["resume_lsn"] == 1000
@@ -71,7 +71,7 @@ def test_spark_submit_py_files_round_trip(spark, tmp_path_factory):
     assert submit, "spark-submit not on PATH"
     env = dict(os.environ, PYTHONPATH="")  # the zip must be sufficient
     for args in (
-        ["init", "--table", table, "--merge-mode", "mor"],
+        ["init", "--table", table],
         ["ingest", "--changelog", log_dir, "--table", table,
          "--checkpoints", ckpt, "--end-lsn", "600", "--batch-size", "200"],
     ):

@@ -29,7 +29,7 @@ def table(spark, log, tmp_path):
     """Fresh MOR table with 4 committed batches per test (maintenance
     mutates storage, so no sharing)."""
     t = create_transcripts_table(
-        spark, str(tmp_path / "t"), n_buckets=8, merge_mode="mor"
+        spark, str(tmp_path / "t"), n_buckets=8
     )
     cp = CheckpointStore(str(tmp_path / "cp"))
     CdcPipeline(spark, t, cp, changelog=log).run(end_lsn=N_EVENTS, batch_size=600)

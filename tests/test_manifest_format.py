@@ -56,7 +56,7 @@ def source(spark, tmp_path_factory):
     """A healthy 4-bucket MOR table of three delta commits."""
     root = tmp_path_factory.mktemp("manifest_format")
     log = changelog(spark, 1200, n_convs=30, turns_per_conv=6, seed=5)
-    t = create_transcripts_table(spark, str(root / "t"), n_buckets=4, merge_mode="mor")
+    t = create_transcripts_table(spark, str(root / "t"), n_buckets=4)
     CdcPipeline(spark, t, CheckpointStore(str(root / "cp")), changelog=log).run(
         end_lsn=1200, batch_size=400
     )
@@ -102,3 +102,12 @@ def test_unreadable_manifest_raises_and_verify_reports(spark, source, corruption
         res = t.verify(check_all_snapshots=check_all)
         assert not res["ok"]
         assert any(re.search(message, e) for e in res["errors"]), res["errors"]
+
+
+def test_read_changes_rejects_copy_on_write_merges(spark, source):
+    """A "merge" snapshot, which copy-on-write tables of earlier
+    versions committed, rewrote its buckets' files: its added files are
+    not the batch's change rows, so read_changes must refuse it."""
+    t = _handle(spark, source, lambda s: {**s, "operation": "merge"})
+    with pytest.raises(ValueError, match="snapshot_diff"):
+        t.read_changes(t.history()[0]["snapshot_id"])

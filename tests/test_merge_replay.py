@@ -86,7 +86,7 @@ def test_path_mode_sees_files_appended_between_runs(spark, log, tmp_path):
     # MOR: rows_in_batch counts raw batch rows (no in-batch dedup), so
     # the applied-row accounting below is exact
     table = create_transcripts_table(
-        spark, str(tmp_path / "tbl_g"), n_buckets=8, merge_mode="mor"
+        spark, str(tmp_path / "tbl_g"), n_buckets=8
     )
     cp = CheckpointStore(str(tmp_path / "cp_g"))
     pipe = CdcPipeline(spark, table, cp, changelog_path=log_dir)
@@ -126,19 +126,3 @@ def test_crash_resume(spark, log, tmp_path):
     want = final_state_oracle(log.toPandas())
     pd.testing.assert_frame_equal(got, want)
 
-
-def test_copy_on_write_prunes_buckets(spark, log, tmp_path):
-    """A batch touching few conversations rewrites few buckets."""
-    table = create_transcripts_table(spark, str(tmp_path / "tbl_p"), n_buckets=16)
-    cp = CheckpointStore(str(tmp_path / "cp_p"))
-    pipe = CdcPipeline(spark, table, cp, changelog=log)
-    pipe.run(end_lsn=N_EVENTS, batch_size=N_EVENTS)  # bootstrap: all buckets
-    # tiny follow-up batch: one conversation -> exactly one bucket rewritten
-    one_conv = log.filter("conv_id = 'conv-00000000'").limit(5)
-    tiny = one_conv.toPandas()
-    tiny["lsn"] = tiny["lsn"] + N_EVENTS
-    tiny_df = spark.createDataFrame(tiny)
-    from silk_spark.streaming.pipeline import project_changes
-
-    summary = table.merge_batch(project_changes(tiny_df), batch_id="tiny")
-    assert summary["buckets_rewritten"] == 1

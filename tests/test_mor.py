@@ -1,4 +1,4 @@
-"""Merge-on-read mode: replay equality with COW, exactly-once,
+"""Merge-on-read: replay equality with the oracle, exactly-once,
 compaction invariance, O(batch) write behavior."""
 
 import os
@@ -20,34 +20,29 @@ def log(spark):
     return changelog(spark, 3000, n_convs=60, turns_per_conv=8, seed=21)
 
 
-def _run(spark, log, root, mode, batch_size=700, n_buckets=8):
-    t = create_transcripts_table(spark, os.path.join(root, f"t_{mode}_{batch_size}"), n_buckets=n_buckets, merge_mode=mode)
-    cp = CheckpointStore(os.path.join(root, f"cp_{mode}_{batch_size}"))
+def _run(spark, log, root, batch_size=700, n_buckets=8):
+    t = create_transcripts_table(spark, os.path.join(root, f"t_{batch_size}"), n_buckets=n_buckets)
+    cp = CheckpointStore(os.path.join(root, f"cp_{batch_size}"))
     CdcPipeline(spark, t, cp, changelog=log).run(end_lsn=3000, batch_size=batch_size)
     return t
 
 
-def test_mor_matches_oracle_and_cow(spark, log, tmp_path_factory):
+def test_mor_matches_oracle(spark, log, tmp_path_factory):
     root = str(tmp_path_factory.mktemp("mor"))
-    t_mor = _run(spark, log, root, "mor")
-    t_cow = _run(spark, log, root, "cow")
-    want = normalize(final_state_oracle(log.toPandas()))
-    got_mor = normalize(t_mor.read().toPandas())
-    got_cow = normalize(t_cow.read().toPandas())
-    pd.testing.assert_frame_equal(got_mor, want)
-    pd.testing.assert_frame_equal(got_cow, want)
+    got = normalize(_run(spark, log, root).read().toPandas())
+    pd.testing.assert_frame_equal(got, normalize(final_state_oracle(log.toPandas())))
 
 
 def test_mor_batch_slicing_invariance(spark, log, tmp_path_factory):
     root = str(tmp_path_factory.mktemp("mor_slice"))
-    a = normalize(_run(spark, log, root, "mor", batch_size=500).read().toPandas())
-    b = normalize(_run(spark, log, root, "mor", batch_size=1700).read().toPandas())
+    a = normalize(_run(spark, log, root, batch_size=500).read().toPandas())
+    b = normalize(_run(spark, log, root, batch_size=1700).read().toPandas())
     pd.testing.assert_frame_equal(a, b)
 
 
 def test_mor_exactly_once_replay(spark, log, tmp_path_factory):
     root = str(tmp_path_factory.mktemp("mor_once"))
-    t = _run(spark, log, root, "mor")
+    t = _run(spark, log, root)
     cp = CheckpointStore(os.path.join(root, "cp2"))
     pipe = CdcPipeline(spark, t, cp, changelog=log)
     results = pipe.run(end_lsn=3000, batch_size=700, start_lsn=0)
@@ -56,7 +51,7 @@ def test_mor_exactly_once_replay(spark, log, tmp_path_factory):
 
 def test_mor_appends_not_rewrites(spark, log, tmp_path_factory):
     root = str(tmp_path_factory.mktemp("mor_files"))
-    t = _run(spark, log, root, "mor")
+    t = _run(spark, log, root)
     # every batch's delta files survive in the manifest (append-only)
     snaps = t.meta["snapshots"]
     assert len(snaps) >= 4
@@ -66,7 +61,7 @@ def test_mor_appends_not_rewrites(spark, log, tmp_path_factory):
 
 def test_mor_compaction_preserves_state(spark, log, tmp_path_factory):
     root = str(tmp_path_factory.mktemp("mor_compact"))
-    t = _run(spark, log, root, "mor")
+    t = _run(spark, log, root)
     before = normalize(t.read().toPandas())
     t.compact()
     after = normalize(t.refresh().read().toPandas())
@@ -76,19 +71,23 @@ def test_mor_compaction_preserves_state(spark, log, tmp_path_factory):
     assert all(len(v) <= 2 for v in files.values())
 
 
-@pytest.mark.parametrize("case", ["mor", "cow", "pre_rescale", "mor_ranges"])
+@pytest.mark.parametrize("case", ["mor", "compacted", "pre_rescale", "mor_ranges"])
 def test_bucket_subset_scans_partition_the_resolve(spark, log, tmp_path_factory, case):
     """The `scan(buckets=...)` contract: each bucket's pruned scan
     returns only that bucket's rows, the per-bucket scans partition the
     full resolve exactly, and one bucket's pruned scan equals the full
-    resolve restricted to that bucket. Checked on a MOR table, a COW
-    table, a pre-rescale MOR snapshot read after the layout changed
-    (its bucket keys name buckets of its own 8-bucket function), and a
-    32-bucket MOR table, more buckets than writer tasks, whose delta
-    files each hold a bucket range."""
+    resolve restricted to that bucket. Checked on a MOR table, the
+    same table compacted (one-bucket files only), a pre-rescale MOR
+    snapshot read after the layout changed (its bucket keys name
+    buckets of its own 8-bucket function), and a 32-bucket MOR table,
+    more buckets than writer tasks, whose delta files each hold a
+    bucket range."""
     root = str(tmp_path_factory.mktemp(f"subset_{case}"))
-    t = _run(spark, log, root, "cow" if case == "cow" else "mor", n_buckets=32 if case == "mor_ranges" else 8)
+    t = _run(spark, log, root, n_buckets=32 if case == "mor_ranges" else 8)
     as_of = None
+    if case == "compacted":
+        t.compact()
+        assert all(len(b) == 1 for b, _p, _sid in t.files())
     if case == "pre_rescale":
         as_of = t.meta["current_snapshot_id"]
         t.rescale_buckets(3)
@@ -124,7 +123,7 @@ def test_in_memory_metadata_backend(spark, log, tmp_path_factory):
     t = LakeTable.create(
         spark, os.path.join(root, "t"), transcripts_schema(),
         key_cols=list(KEYS), version_cols=list(VERSION_ORDER),
-        n_buckets=8, merge_mode="mor", meta_io=store,
+        n_buckets=8, meta_io=store,
     )
     cp = CheckpointStore(os.path.join(root, "cp"))
     CdcPipeline(spark, t, cp, changelog=log).run(end_lsn=3000, batch_size=700)
@@ -139,7 +138,7 @@ def test_in_memory_metadata_backend(spark, log, tmp_path_factory):
 
 def test_mor_compaction_keeps_tombstones_by_default(spark, log, tmp_path_factory):
     root = str(tmp_path_factory.mktemp("mor_tomb"))
-    t = _run(spark, log, root, "mor")
+    t = _run(spark, log, root)
     t.compact()
     t.refresh()
     with_t = t.scan(with_tombstones=True).count()
@@ -162,7 +161,7 @@ def test_mor_commit_one_file_per_writer_task(spark, log, tmp_path_factory):
     parts = spark.sparkContext.defaultParallelism
     assert parts < n_buckets
     t = create_transcripts_table(
-        spark, str(tmp_path_factory.mktemp("mor_tasks")), n_buckets=n_buckets, merge_mode="mor"
+        spark, str(tmp_path_factory.mktemp("mor_tasks")), n_buckets=n_buckets
     )
     sc = spark.sparkContext
     group = "mor-write-tasks"
@@ -232,7 +231,7 @@ def ranged(spark, log, tmp_path_factory):
     n_buckets = 32
     assert spark.sparkContext.defaultParallelism < n_buckets
     root = str(tmp_path_factory.mktemp("mor_ranged"))
-    t = create_transcripts_table(spark, os.path.join(root, "t"), n_buckets=n_buckets, merge_mode="mor")
+    t = create_transcripts_table(spark, os.path.join(root, "t"), n_buckets=n_buckets)
     pipe = CdcPipeline(spark, t, None, changelog=log)
     pipe.run(end_lsn=1400, batch_size=700)
     base = t.compact()["snapshot_id"]
@@ -298,7 +297,7 @@ def test_tiny_mor_batch_commits_only_nonempty_files(spark, log, tmp_path_factory
         if bucket_of(r.conv_id, "string", n_buckets) not in first_task
     ][:5]
     t = create_transcripts_table(
-        spark, str(tmp_path_factory.mktemp("mor_tiny")), n_buckets=n_buckets, merge_mode="mor"
+        spark, str(tmp_path_factory.mktemp("mor_tiny")), n_buckets=n_buckets
     )
     summary = t.merge_batch(project_changes(log.filter(F.col("lsn").isin(lsns))), "tiny")
     fs = t.files()
@@ -313,3 +312,8 @@ def test_tiny_mor_batch_commits_only_nonempty_files(spark, log, tmp_path_factory
     }
     assert on_disk == {_path(p) for p in fs.paths()}
     assert t.scan(resolve=False).count() == 5
+
+
+def test_create_transcripts_table_accepts_only_mor(spark, tmp_path):
+    with pytest.raises(ValueError, match="merge-on-read"):
+        create_transcripts_table(spark, str(tmp_path / "t"), merge_mode="cow")

@@ -339,7 +339,7 @@ def test_manifest_scan_launches_no_listing_job(spark, tmp_path_factory):
     from silk_spark.streaming.pipeline import create_transcripts_table, project_changes
 
     t = create_transcripts_table(
-        spark, str(tmp_path_factory.mktemp("listing")), n_buckets=64, merge_mode="mor"
+        spark, str(tmp_path_factory.mktemp("listing")), n_buckets=64
     )
     t.merge_batch(project_changes(changelog(spark, 2000, n_convs=200, seed=8)), "b-0")
     t.compact()

@@ -75,12 +75,10 @@ def _log_df(spark, pdf: pd.DataFrame):
     )
 
 
-def _replay(spark, log_df, n_events: int, mode: str, batch_size: int) -> pd.DataFrame:
+def _replay(spark, log_df, n_events: int, batch_size: int) -> pd.DataFrame:
     root = tempfile.mkdtemp(prefix="silk_prop_")
     try:
-        table = create_transcripts_table(
-            spark, f"{root}/t", n_buckets=4, merge_mode=mode
-        )
+        table = create_transcripts_table(spark, f"{root}/t", n_buckets=4)
         pipe = CdcPipeline(spark, table, CheckpointStore(f"{root}/cp"), changelog=log_df)
         pipe.run(end_lsn=n_events, batch_size=batch_size)
         return normalize(table.read().toPandas())
@@ -95,13 +93,13 @@ class TestReplayProperties:
         deadline=None,
         suppress_health_check=[HealthCheck.function_scoped_fixture],
     )
-    @given(events=_LOG, mode=st.sampled_from(["cow", "mor"]))
-    def test_replay_any_log_matches_oracle(self, spark, events, mode):
+    @given(events=_LOG)
+    def test_replay_any_log_matches_oracle(self, spark, events):
         pdf = _log_pdf(events)
         # batch split chosen from the log itself so shrinking explores
         # 1-event batches and the one-shot apply alike
         batch_size = max(1, len(events) // 3)
-        got = _replay(spark, _log_df(spark, pdf), len(events), mode, batch_size)
+        got = _replay(spark, _log_df(spark, pdf), len(events), batch_size)
         want = final_state_oracle(pdf)
         # check_dtype=False: Spark round-trips turn_idx as int32, the
         # hand-built pandas oracle as int64 — values are the contract
@@ -145,12 +143,11 @@ class TestCrashResumeProperty:
     )
     @given(
         events=_LOG,
-        mode=st.sampled_from(["cow", "mor"]),
         stop_after=st.integers(0, 5),
         dup_tail=st.booleans(),
     )
     def test_crash_resume_any_point_matches_oracle(
-        self, spark, events, mode, stop_after, dup_tail
+        self, spark, events, stop_after, dup_tail
     ):
         """Crash after an ARBITRARY number of batches, resume with a
         FRESH pipeline + table handle (checkpoint-driven), optionally
@@ -165,9 +162,7 @@ class TestCrashResumeProperty:
         log_df = _log_df(spark, pdf)
         root = tempfile.mkdtemp(prefix="silk_prop_cr_")
         try:
-            table = create_transcripts_table(
-                spark, os.path.join(root, "t"), n_buckets=4, merge_mode=mode
-            )
+            table = create_transcripts_table(spark, os.path.join(root, "t"), n_buckets=4)
             cp = CheckpointStore(os.path.join(root, "cp"))
             CdcPipeline(spark, table, cp, changelog=log_df).run(
                 end_lsn=n, batch_size=batch_size, stop_after=stop_after or None

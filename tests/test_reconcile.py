@@ -44,7 +44,7 @@ def test_mapping_targets_adjacent_near_dup(spark, batch):
 
 
 def test_reconcile_then_merge_collapses_resend(spark, batch, tmp_path):
-    t = create_transcripts_table(spark, str(tmp_path / "t"), n_buckets=4, merge_mode="mor")
+    t = create_transcripts_table(spark, str(tmp_path / "t"), n_buckets=4)
     cp = CheckpointStore(str(tmp_path / "cp"))
     pipe = CdcPipeline(
         spark, t, cp, changelog=batch, pre_merge=reconcile_near_dups
@@ -205,7 +205,7 @@ def test_crash_mid_write_leaves_table_consistent(spark, batch, tmp_path):
     """A snap dir written without a metadata commit (crash between the
     data write and the atomic version-hint flip) must be invisible;
     re-applying the batch afterwards converges normally."""
-    t = create_transcripts_table(spark, str(tmp_path / "t3"), n_buckets=4, merge_mode="mor")
+    t = create_transcripts_table(spark, str(tmp_path / "t3"), n_buckets=4)
     cp = CheckpointStore(str(tmp_path / "cp3"))
     # simulate the torn write: orphan data files, metadata untouched
     orphan = os.path.join(t.data_dir, "snap-1", "_bucket=0")

@@ -95,7 +95,7 @@ class TestRescale:
 
         from silk_spark.sources.lake import bucket_of
 
-        table, pipe = _pipeline(spark, log, tmp_path, "lk", n_buckets=8, merge_mode="mor")
+        table, pipe = _pipeline(spark, log, tmp_path, "lk", n_buckets=8)
         pipe.run(end_lsn=N_EVENTS, batch_size=1500)
         pre_snap = table.meta["current_snapshot_id"]
         table.rescale_buckets(3)

@@ -66,7 +66,7 @@ def test_mor_mid_log_evolution(spark, tmp_path):
     v2 = log.filter("schema_version = 2")
 
     table = create_transcripts_table(
-        spark, str(tmp_path / "tblm"), n_buckets=8, merge_mode="mor"
+        spark, str(tmp_path / "tblm"), n_buckets=8
     )
     cp = CheckpointStore(str(tmp_path / "cpm"))
     CdcPipeline(spark, table, cp, changelog=v1).run(end_lsn=N // 2, batch_size=500)

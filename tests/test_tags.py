@@ -18,7 +18,7 @@ N_EVENTS = 2000
 @pytest.fixture()
 def table(spark, tmp_path):
     log = changelog(spark, N_EVENTS, n_convs=40, turns_per_conv=6, seed=11)
-    t = create_transcripts_table(spark, str(tmp_path / "t"), n_buckets=4, merge_mode="mor")
+    t = create_transcripts_table(spark, str(tmp_path / "t"), n_buckets=4)
     pipe = CdcPipeline(spark, t, CheckpointStore(str(tmp_path / "cp")), changelog=log)
     pipe.run(end_lsn=N_EVENTS, batch_size=500)  # 4 snapshots
     return t

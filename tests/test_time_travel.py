@@ -24,13 +24,11 @@ def _slice(log, lo, hi):
     return log.filter((log.lsn >= lo) & (log.lsn < hi))
 
 
-@pytest.fixture(scope="module", params=["mor", "cow"])
+@pytest.fixture(scope="module", params=["mor"])
 def table(request, spark, log, tmp_path_factory):
-    """One table per mode with 4 committed batches of 600 events."""
+    """A table with 4 committed batches of 600 events."""
     root = str(tmp_path_factory.mktemp(f"tt_{request.param}"))
-    t = create_transcripts_table(
-        spark, os.path.join(root, "t"), n_buckets=8, merge_mode=request.param
-    )
+    t = create_transcripts_table(spark, os.path.join(root, "t"), n_buckets=8)
     cp = CheckpointStore(os.path.join(root, "cp"))
     CdcPipeline(spark, t, cp, changelog=log).run(end_lsn=2400, batch_size=600)
     return t
@@ -66,12 +64,8 @@ def test_as_of_unknown_snapshot_raises(table):
 
 
 def test_read_changes_is_exact_batch_slice(spark, table, log):
-    """MOR: files added in (1, 3] hold exactly the change events of
+    """Files added in (1, 3] hold exactly the change events of
     batches 2 and 3 (the incremental-scan contract)."""
-    if table.meta["merge_mode"] != "mor":
-        with pytest.raises(ValueError, match="snapshot_diff"):
-            table.read_changes(1, 3)
-        return
     got = table.read_changes(1, 3).toPandas()
     # the pipeline projects off changelog bookkeeping (offset,
     # schema_version) before merge — compare on the table columns
@@ -86,14 +80,10 @@ def test_read_changes_is_exact_batch_slice(spark, table, log):
 
 
 def test_read_changes_empty_range(table):
-    if table.meta["merge_mode"] != "mor":
-        pytest.skip("mor only")
     assert table.read_changes(2, 2).count() == 0
 
 
 def test_read_changes_rejects_rewrites(spark, table):
-    if table.meta["merge_mode"] != "mor":
-        pytest.skip("mor only")
     table.compact()
     with pytest.raises(ValueError, match="snapshot_diff"):
         table.read_changes(4)  # compact snapshot (5) is in range

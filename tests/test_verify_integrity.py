@@ -12,7 +12,7 @@ from silk_spark.streaming.pipeline import CdcPipeline, create_transcripts_table
 @pytest.fixture()
 def table(spark, tmp_path):
     log = changelog(spark, 1200, n_convs=30, turns_per_conv=6, seed=3)
-    t = create_transcripts_table(spark, str(tmp_path / "t"), n_buckets=4, merge_mode="mor")
+    t = create_transcripts_table(spark, str(tmp_path / "t"), n_buckets=4)
     CdcPipeline(spark, t, CheckpointStore(str(tmp_path / "cp")), changelog=log).run(
         end_lsn=1200, batch_size=400
     )
